@@ -114,41 +114,43 @@ def bounded_broadcast(
     )
 
 
-def spread_scan(df, key_col: str, target: int | None = None):
-    """Conditionally hash-repartition an UNDER-PARALLEL scan before a
-    CPU-heavy map chain (r16 optimization; guide §2.5 "input skew: one
-    huge unsplittable file ... repartition immediately after the read").
+def spread_scan(df, key_col: str):
+    """Conditionally hash-repartition an UNDER-PARALLEL input before a
+    CPU-heavy map chain (input skew: one huge unsplittable file is best
+    repartitioned immediately after the read).
 
     A single-file / single-row-group parquet source scans as ONE task,
     so an expression-heavy projection (tokenize → shingle → hash chains
     over document text) executes on one core no matter how wide the
-    cluster is. This helper is the shared, CONDITIONAL spread the dedup
-    operators have used since r3 (operators/dedup.py::_parallelize —
-    that probe/threshold rationale carries over verbatim): when the
-    scan already has at least half the cluster's slots it is returned
-    UNCHANGED (zero added exchanges at healthy layouts — the 100 TB
-    case), otherwise it is hash-repartitioned ONCE by a deterministic
-    key (never round-robin: retried tasks must reproduce the same
-    row-to-partition assignment, SPARK-38388).
+    cluster is. When the input already has at least half the cluster's
+    slots it is returned UNCHANGED (zero added exchanges at healthy
+    layouts — the 100 TB case), otherwise it is hash-repartitioned ONCE
+    to defaultParallelism by a deterministic key (never round-robin:
+    retried tasks must reproduce the same row-to-partition assignment,
+    SPARK-38388).
+
+    Probe choice: the parallelism probe goes through ``df.rdd``, which
+    reports the frame's actual pre-AQE execution parallelism and runs no
+    job on a scan. A file-count probe (``inputFiles()``, no RDD
+    conversion) was tried and rejected: it reads the leaf relation, so a
+    plan that reduces parallelism between scan and operator (coalesce,
+    an AQE-coalesced shuffle) looks well-parallel while executing on few
+    tasks. The RDD probe errs only toward a redundant repartition.
+
+    Callers pass raw scans or caller-supplied frames (the dedup and FTS
+    operators, ``tokenized_corpus``/``bm25_scores``). On a frame that
+    already contains exchanges, converting to an RDD under AQE can
+    finalize query stages and reports PRE-coalesce partition counts, so
+    the probe may over-count parallelism or do planning work; for a
+    deliberate mid-plan re-spread use an unconditional deterministic
+    ``repartition(n, key)`` sized by ``defaultParallelism`` instead
+    (the ngram_jaccard_pairs rep-set pattern).
 
     Only use ahead of map chains whose downstream aggregates are
     partitioning-insensitive (exact integers / row-local floats /
     pre-rounded values) — the house float policy every gate follows.
-
-    CONTRACT (ADVICE r16): call this on RAW SCANS ONLY — a bare
-    load_table/read projection with no exchange beneath it. The
-    parallelism probe goes through ``df.rdd``, which is only a free and
-    accurate probe for a scan: on a plan that already contains
-    exchanges under AQE, converting to an RDD finalizes (and can
-    eagerly execute) query stages and reports PRE-coalesce partition
-    counts, so the helper could mis-decide or do hidden work if applied
-    mid-plan. For mid-plan re-spreads use an unconditional deterministic
-    ``repartition(n, key)`` sized by ``defaultParallelism`` instead
-    (the ngram_jaccard_pairs rep-set pattern).
     """
-    sess = df.sparkSession
-    if target is None:
-        target = sess.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() * 2 >= target:
         return df
     return df.repartition(target, key_col)

@@ -20,27 +20,23 @@ def _c(col: Column | str) -> Column:
 
 
 def tokenize_sql(col: str) -> str:
-    """Spark-SQL FRAGMENT twin of tokenize() for a column name (or SQL
-    fragment). r17 (guide §7.3): building these chains as strings parsed
-    JVM-side by F.expr/selectExpr instead of python-lambda Column trees
-    cuts the py4j chatter that dominated gate plan-construction time
-    (one `docs.select(tokenize("text"))` measured 0.24 s to CONSTRUCT vs
-    0.04 s via expr — the resolved plan is identical, pinned by
-    tests/test_r17_optimizations.py)."""
+    """Spark-SQL FRAGMENT of the tokenize() chain over `col`, a column
+    name or SQL fragment. Identifier-only contract: `col` is spliced
+    into the SQL text UNQUOTED, so pass a plain identifier (or a trusted
+    fragment such as another *_sql result), never user input. Building
+    the chain as a string parsed JVM-side by F.expr instead of a
+    python-lambda Column tree cuts the py4j chatter that dominated gate
+    plan-construction time (one `docs.select(tokenize(...))` measured
+    0.24 s to construct as Columns vs 0.04 s via expr — the
+    resolved plan is identical, pinned against the lambda construction
+    by tests/test_r17_optimizations.py)."""
     return rf"filter(split(lower(trim({col})), '\\s+'), x -> x != '')"
 
 
-def tokenize(text: Column | str) -> Column:
-    """Lowercased whitespace tokens, empty-safe. Twin SQL:
-    list_filter(regexp_split_to_array(lower(trim(x)), '\\s+'), t -> t <> '')
-
-    A str argument is rendered through tokenize_sql (one JVM parse); a
-    Column argument keeps the Column construction — identical resolved
-    expressions either way."""
-    if isinstance(text, str):
-        return F.expr(tokenize_sql(text))
-    t = F.split(F.lower(F.trim(text)), r"\s+")
-    return F.filter(t, lambda x: x != "")
+def tokenize(text: str) -> Column:
+    """Lowercased whitespace tokens of column `text`, empty-safe. Twin SQL:
+    list_filter(regexp_split_to_array(lower(trim(x)), '\\s+'), t -> t <> '')"""
+    return F.expr(tokenize_sql(text))
 
 
 def md5_long(s: Column | str) -> Column:
@@ -49,7 +45,7 @@ def md5_long(s: Column | str) -> Column:
     return F.conv(F.substring(F.md5(_c(s)), 1, 15), 16, 10).cast("long")
 
 
-def token_count(text: Column | str) -> Column:
+def token_count(text: str) -> Column:
     return F.size(tokenize(text))
 
 
@@ -89,7 +85,7 @@ def cjk_chars(text: Column | str) -> Column:
     return F.length(t) - F.length(F.regexp_replace(t, r"[一-鿿]", ""))
 
 
-def lang_id(text: Column | str) -> Column:
+def lang_id(text: str) -> Column:
     """Heuristic language ID: CJK presence wins, else argmax stopword hits
     with fixed precedence en > de > fr > es, else 'unknown'."""
     toks = tokenize(text)
@@ -105,14 +101,14 @@ def lang_id(text: Column | str) -> Column:
     )
 
 
-def quality_score(text: Column | str) -> Column:
+def quality_score(text: str) -> Column:
     """Composite document-quality score in [0,1]: length factor × mean-word-
     length sanity × (1 - punctuation excess) × stopword presence. The exact
     formula is arbitrary but deterministic; it mirrors the
     length/punct/stopword ratio features used for LLM-corpus filtering."""
     toks = tokenize(text)
     n_tok = F.size(toks).cast("double")
-    n_chars = F.length(_c(text)).cast("double")
+    n_chars = F.length(text).cast("double")
     avg_wlen = F.when(n_tok > 0, n_chars / n_tok).otherwise(F.lit(0.0))
     len_factor = F.least(n_tok / F.lit(100.0), F.lit(1.0))
     wlen_factor = F.when((avg_wlen >= 3.0) & (avg_wlen <= 12.0), F.lit(1.0)).otherwise(F.lit(0.5))
@@ -122,11 +118,14 @@ def quality_score(text: Column | str) -> Column:
 
 
 def shingles_sql(tokens: str, k: int = 3) -> str:
-    """Spark-SQL FRAGMENT twin of shingles() over a token-array column
-    name or SQL fragment (compose with tokenize_sql for the full
-    text→k-gram chain in one JVM parse). The fragment duplicates the
-    `tokens` subtree exactly as the Column form's expression tree did,
-    so the resolved plan is unchanged."""
+    """Spark-SQL FRAGMENT of the shingles() chain over `tokens`, a
+    token-array column name or SQL fragment (compose with tokenize_sql
+    for the full text→k-gram chain in one JVM parse). Identifier-only
+    contract: `tokens` is spliced into the SQL text UNQUOTED, so pass a
+    plain identifier or a trusted *_sql fragment, never user input. The
+    fragment repeats the `tokens` subtree exactly as the former Column
+    construction's expression tree did, so the resolved plan is the
+    same (tests/test_r17_optimizations.py)."""
     out = tokens
     for j in range(1, k):
         shifted = f"slice({tokens}, {j + 1}, greatest(size({tokens}) - {j}, 0))"
@@ -134,7 +133,7 @@ def shingles_sql(tokens: str, k: int = 3) -> str:
     return f"filter({out}, x -> x IS NOT NULL)"
 
 
-def shingles(tokens: Column | str, k: int = 3) -> Column:
+def shingles(tokens: str, k: int = 3) -> Column:
     """k-gram shingles via zip_with over k shifted slices of the token
     array (portable to DuckDB's 1-based list indexing without
     slice-semantics mismatches).
@@ -146,30 +145,20 @@ def shingles(tokens: Column | str, k: int = 3) -> Column:
     row level. Trailing partial shingles become null (concat propagates
     null past the array end) and are filtered.
 
-    A str argument is a SQL FRAGMENT for the token array (usually
-    tokenize_sql(...)) rendered through shingles_sql — one JVM parse
-    instead of k+1 python-lambda conversions (r17, guide §7.3);
-    identical resolved expressions either way."""
-    if isinstance(tokens, str):
-        return F.expr(shingles_sql(tokens, k))
-    n = F.size(tokens)
-    out = tokens
-    for j in range(1, k):
-        shifted = F.slice(tokens, j + 1, F.greatest(n - j, F.lit(0)))
-        out = F.zip_with(out, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
-    return F.filter(out, lambda x: x.isNotNull())
+    `tokens` is a token-array column name or a SQL fragment for one
+    (usually tokenize_sql(...)), rendered through shingles_sql — one JVM
+    parse instead of k+1 python-lambda conversions."""
+    return F.expr(shingles_sql(tokens, k))
 
 
-def doc_fingerprint(text: Column | str, k: int = 3) -> Column:
+def doc_fingerprint(text: str, k: int = 3) -> Column:
     """Deterministic document fingerprint: min md5-derived 60-bit hash over
     k-gram shingles (order-independent content fingerprint; the rolling-hash
     analog of the reference's sha-prefix doc ids, src/index.ts:111-114)."""
-    sh = (
-        shingles(tokenize_sql(text), k)
-        if isinstance(text, str)
-        else shingles(tokenize(text), k)
+    hashed = F.transform(
+        shingles(tokenize_sql(text), k),
+        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
     )
-    hashed = F.transform(sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"))
     return F.array_min(hashed)
 
 
@@ -220,7 +209,7 @@ RATER_MWL_MILLI_THRESHOLD = 4500
 RATER_TTR_PPM_THRESHOLD = 450000
 
 
-def rater_raw_cols(text: Column | str = "text") -> list[Column]:
+def rater_raw_cols(text: str = "text") -> list[Column]:
     """The three exact-integer columns every rater-family gate derives
     from: _sl = 1000·Σ token lengths, _td = 1e6·distinct-token count,
     _nt = max(token count, 1). Downstream: mean word length milli =

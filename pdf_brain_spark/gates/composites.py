@@ -3,11 +3,11 @@ window-compression play) and the round-8 queue — rank fusion,
 relevance feedback, SCD2/attribution/transitions/OHLC, column
 profiling, exact streaming heavy hitters, curriculum compositions.
 
-Split out of the single-file pdf_brain_spark/queries.py at round 12
-(VERDICT r11 item 5). Import-order contract: pdf_brain_spark.queries
-imports the gates modules in REGISTRATION ORDER, so the @query side
-effects fill the registry exactly as the single-file layout did; the
-driver-facing surface (names, oracles, window) is byte-identical.
+Split out of the single-file pdf_brain_spark/queries.py at round 12.
+Import-order contract: the gates package (gates/__init__.py) imports
+the gates modules in REGISTRATION ORDER, so the @query side effects
+fill the registry exactly as the single-file layout did, whichever
+gates module a process imports first.
 """
 
 from __future__ import annotations
@@ -1854,7 +1854,7 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     leakage_rate ≥ 0.5 flags the doc. Plan: one gram-key join — at
     100 TB the train gram set is bloom-filtered or bucket-joined; the
     val side (10%) streams against it."""
-    from pdf_brain_spark.functions.text import shingles, tokenize, tokenize_sql
+    from pdf_brain_spark.functions.text import shingles, tokenize_sql
 
     docs = load_table(spark, "documents", sf_dir)
     bucket = (

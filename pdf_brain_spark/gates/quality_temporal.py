@@ -4,11 +4,11 @@ analytic windows, LLM enrichment (§2.9 M8) + LLM-output hygiene, and
 the training-data hygiene extensions (PII scrubbing, repetition
 filtering, contamination detection).
 
-Split out of the single-file pdf_brain_spark/queries.py at round 12
-(VERDICT r11 item 5). Import-order contract: pdf_brain_spark.queries
-imports the gates modules in REGISTRATION ORDER, so the @query side
-effects fill the registry exactly as the single-file layout did; the
-driver-facing surface (names, oracles, window) is byte-identical.
+Split out of the single-file pdf_brain_spark/queries.py at round 12.
+Import-order contract: the gates package (gates/__init__.py) imports
+the gates modules in REGISTRATION ORDER, so the @query side effects
+fill the registry exactly as the single-file layout did, whichever
+gates module a process imports first.
 """
 
 from __future__ import annotations
@@ -3193,7 +3193,7 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a broadcast (or bloom-filtered) gram set, no shuffle of the
     corpus. Decontamination = anti-join on the same predicate."""
     from pdf_brain_spark.functions.guards import spread_scan
-    from pdf_brain_spark.functions.text import shingles, tokenize, tokenize_sql
+    from pdf_brain_spark.functions.text import shingles, tokenize_sql
 
     # r16: spread the single-task scan ahead of the shingle chain
     # (guide §2.5; exact-integer counts, partitioning-insensitive)
@@ -3260,7 +3260,7 @@ def boilerplate_ngram_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     carrying one row per (doc, distinct gram), never positional copies.
     The report feeds a broadcast semi-join removal pass (same shape as
     benchmark_contamination's decontaminate arm)."""
-    from pdf_brain_spark.functions.text import shingles, tokenize, tokenize_sql
+    from pdf_brain_spark.functions.text import shingles, tokenize_sql
 
     docs = load_table(spark, "documents", sf_dir)
     n_docs = docs.count()

@@ -4,11 +4,11 @@ nonparametric rank tests, cluster-quality evals, inference/
 reliability audits, taxonomy IC similarity, retrieval eval (RBO,
 hubness, margin alignment), spectra, and the Little's-law audit.
 
-Split out of the single-file pdf_brain_spark/queries.py at round 12
-(VERDICT r11 item 5). Import-order contract: pdf_brain_spark.queries
-imports the gates modules in REGISTRATION ORDER, so the @query side
-effects fill the registry exactly as the single-file layout did; the
-driver-facing surface (names, oracles, window) is byte-identical.
+Split out of the single-file pdf_brain_spark/queries.py at round 12.
+Import-order contract: the gates package (gates/__init__.py) imports
+the gates modules in REGISTRATION ORDER, so the @query side effects
+fill the registry exactly as the single-file layout did, whichever
+gates module a process imports first.
 """
 
 from __future__ import annotations
@@ -223,7 +223,7 @@ def good_turing_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent instance count) so a broken chain fails by name.
     Randomized pure-python counts-of-counts mirror in
     tests/test_randomized_references.py."""
-    from pdf_brain_spark.functions.text import shingles, tokenize, tokenize_sql
+    from pdf_brain_spark.functions.text import shingles, tokenize_sql
 
     docs = load_table(spark, "documents", sf_dir)
     inst = docs.select(
@@ -310,7 +310,7 @@ def ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only against a broadcast max-id row, never a global rank.
     Randomized pure-python first-seen mirror in
     tests/test_randomized_references.py."""
-    from pdf_brain_spark.functions.text import shingles, tokenize, tokenize_sql
+    from pdf_brain_spark.functions.text import shingles, tokenize_sql
 
     docs = load_table(spark, "documents", sf_dir)
     dt = (
@@ -729,7 +729,7 @@ def lm_pruning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the grid costs 5× a vocab-grain scan, never a corpus
     rescan. Randomized pure-python mirror in
     tests/test_randomized_references.py."""
-    from pdf_brain_spark.functions.text import shingles, tokenize, tokenize_sql
+    from pdf_brain_spark.functions.text import shingles, tokenize_sql
 
     docs = load_table(spark, "documents", sf_dir)
     c = (
@@ -3158,21 +3158,14 @@ def yule_k_by_source(
     posture. Randomized second opinion: Σm²V_m == Σc² in exact ints and
     a float per-definition mirror in
     tests/test_randomized_references.py."""
-    from pdf_brain_spark.functions.text import tokenize
+    from pdf_brain_spark.suites import doc_tokens, source_term_counts
 
-    # r16 A/B: spread_scan here measured +0.19 s (0.56→0.75 warm min) —
-    # reverted (tokenize-only chain; see OPTIMIZATION_r16.md).
-    # r17: `shared_counts` (the suite_term_stats shared (source, term,
-    # c) table) IS this gate's first groupBy — consumed directly.
-    if shared_counts is not None:
-        c = shared_counts.select("source", "term", F.col("c").cast("long").alias("c"))
-    else:
-        docs = load_table(spark, "documents", sf_dir)
-        c = (
-            docs.select("source", F.explode(tokenize("text")).alias("term"))
-            .groupBy("source", "term")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
+    # Input: the suite_term_stats (source, term, c) counts — this gate's
+    # first groupBy.
+    counts = shared_counts
+    if counts is None:
+        counts = source_term_counts(doc_tokens(spark, sf_dir))
+    c = counts.select("source", "term", F.col("c").cast("long").alias("c"))
     m = c.groupBy("source").agg(
         F.sum("c").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("n_types"),

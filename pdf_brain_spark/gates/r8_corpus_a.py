@@ -2,11 +2,11 @@
 rotation queue — corpus statistics, embedding analytics, streaming
 monoid serving paths, fingerprinting, sampling, and BI families.
 
-Split out of the single-file pdf_brain_spark/queries.py at round 12
-(VERDICT r11 item 5). Import-order contract: pdf_brain_spark.queries
-imports the gates modules in REGISTRATION ORDER, so the @query side
-effects fill the registry exactly as the single-file layout did; the
-driver-facing surface (names, oracles, window) is byte-identical.
+Split out of the single-file pdf_brain_spark/queries.py at round 12.
+Import-order contract: the gates package (gates/__init__.py) imports
+the gates modules in REGISTRATION ORDER, so the @query side effects
+fill the registry exactly as the single-file layout did, whichever
+gates module a process imports first.
 """
 
 from __future__ import annotations
@@ -3556,7 +3556,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     toks = docs.select("doc_id", tokenize("text").alias("tokens"))
     grams = toks.select(
-        "doc_id", F.explode(shingles(F.col("tokens"), 3)).alias("term")
+        "doc_id", F.explode(shingles("tokens", 3)).alias("term")
     )
     tf = grams.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     stats = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -4233,17 +4233,17 @@ def term_pmi_pairs(
     as integer micro-nats of one exact-integer rational, the
     established engine-portable log encoding
     (operators/analytics.py::pmi_pairs). Directional: pmi(a→b) ≠
-    pmi(b→a). ``shared_toks``: the suite_term_stats shared token-array
-    table (r17) — pmi consumes its `_toks` column instead of
-    re-tokenizing and re-checkpointing the corpus."""
-    from pdf_brain_spark.operators.analytics import pmi_pairs
+    pmi(b→a). Input: the suite_term_stats token arrays
+    (suites.py::doc_tokens) — ``shared_toks`` when the suite already
+    holds them; standalone, doc_tokens' output is checkpointed here
+    because pmi reads it three times (totals, unigrams, bigrams)."""
+    from pdf_brain_spark.operators.analytics import pmi_from_tokens
+    from pdf_brain_spark.suites import doc_tokens
 
-    toks = (
-        shared_toks.select(F.col("_toks").alias("_t"))
-        if shared_toks is not None
-        else None
-    )
-    return pmi_pairs(load_table(spark, "documents", sf_dir), toks=toks).orderBy(
+    toks = shared_toks
+    if toks is None:
+        toks = doc_tokens(spark, sf_dir).localCheckpoint(eager=True)
+    return pmi_from_tokens(toks.select(F.col("_toks").alias("_t"))).orderBy(
         "term_a", "term_b"
     )
 
@@ -4453,17 +4453,16 @@ def source_token_entropy(
     (operators/analytics.py::token_entropy), so engine float-summation
     order never matters; both divisions are integer DIV of positive
     operands (floor == truncate). Two map-side-combinable groupBys.
-    ``shared_counts``: the suite_term_stats shared (source, term, c)
-    table (r17) — identical to the member's own first groupBy."""
-    from pdf_brain_spark.operators.analytics import token_entropy
+    Input: the suite_term_stats (source, term, c) counts
+    (suites.py::source_term_counts), ``shared_counts`` in the suite."""
+    from pdf_brain_spark.operators.analytics import token_entropy_from_counts
+    from pdf_brain_spark.suites import doc_tokens, source_term_counts
 
-    counts = (
-        shared_counts.select("source", "term", F.col("c").alias("n"))
-        if shared_counts is not None
-        else None
-    )
-    return token_entropy(
-        load_table(spark, "documents", sf_dir), "source", counts=counts
+    counts = shared_counts
+    if counts is None:
+        counts = source_term_counts(doc_tokens(spark, sf_dir))
+    return token_entropy_from_counts(
+        counts.select("source", "term", F.col("c").alias("n")), "source"
     ).orderBy("source")
 
 

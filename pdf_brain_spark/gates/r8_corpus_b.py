@@ -2,11 +2,11 @@
 rotation queue continued — time-series alignment, lifecycle/cohort,
 basket/graph, tokenizer/corpus-planning, and robust-stats families.
 
-Split out of the single-file pdf_brain_spark/queries.py at round 12
-(VERDICT r11 item 5). Import-order contract: pdf_brain_spark.queries
-imports the gates modules in REGISTRATION ORDER, so the @query side
-effects fill the registry exactly as the single-file layout did; the
-driver-facing surface (names, oracles, window) is byte-identical.
+Split out of the single-file pdf_brain_spark/queries.py at round 12.
+Import-order contract: the gates package (gates/__init__.py) imports
+the gates modules in REGISTRATION ORDER, so the @query side effects
+fill the registry exactly as the single-file layout did, whichever
+gates module a process imports first.
 """
 
 from __future__ import annotations
@@ -519,24 +519,16 @@ def source_term_jsd(
     established order-free log encoding. The grid is sources × corpus
     vocab (bounded), never corpus-sized; kq at np = 0 is finite and
     kept, kp at np = 0 is zero by definition."""
-    from pdf_brain_spark.functions.text import tokenize
+    from pdf_brain_spark.suites import doc_tokens, source_term_counts
 
-    # r16 A/B: spread_scan here measured +0.65 s (0.90→1.55 warm min;
-    # worst of the family — both np/nq arms re-ran the exchange) —
-    # reverted (tokenize-only chain; see OPTIMIZATION_r16.md).
-    # r17: `shared_counts` (the suite_term_stats shared (source, term,
-    # c) table) replaces BOTH tokenize arms — np is the table itself,
-    # nq its term-grain re-aggregate (exact integer identities).
-    if shared_counts is not None:
-        np_ = shared_counts.select("source", "term", F.col("c").alias("np"))
-        nq = shared_counts.groupBy("term").agg(F.sum("c").alias("nq"))
-    else:
-        docs = load_table(spark, "documents", sf_dir)
-        toks = docs.select(
-            "source", F.explode(tokenize("text")).alias("term")
-        )
-        np_ = toks.groupBy("source", "term").agg(F.count(F.lit(1)).alias("np"))
-        nq = toks.groupBy("term").agg(F.count(F.lit(1)).alias("nq"))
+    # Input: the suite_term_stats (source, term, c) counts — np is the
+    # table itself, nq its term-grain re-aggregate (exact integer
+    # identities).
+    counts = shared_counts
+    if counts is None:
+        counts = source_term_counts(doc_tokens(spark, sf_dir))
+    np_ = counts.select("source", "term", F.col("c").alias("np"))
+    nq = counts.groupBy("term").agg(F.sum("c").alias("nq"))
     ts = np_.groupBy("source").agg(F.sum("np").alias("t_s"))
     # the exact vocab size rides the existing 1-row total aggregate for
     # free (nq is term grain) and feeds the broadcast tripwire below
@@ -1572,22 +1564,16 @@ def zipf_fit_report(
     the closed form is one final float expression — the same
     determinism playbook as the streaming regression monoid. One
     term-count shuffle + a 200-row tail; rank ties break by term."""
-    from pdf_brain_spark.functions.text import tokenize
     from pyspark.sql import Window
 
-    # r16 A/B: spread_scan here measured +0.21 s (0.58→0.79 warm min) —
-    # reverted (tokenize-only chain; see OPTIMIZATION_r16.md).
-    # r17: `shared_counts` (suite_term_stats shared (source, term, c))
-    # folds to the corpus term frequency by an exact integer sum.
-    if shared_counts is not None:
-        freq = shared_counts.groupBy("term").agg(F.sum("c").alias("f"))
-    else:
-        docs = load_table(spark, "documents", sf_dir)
-        freq = (
-            docs.select(F.explode(tokenize("text")).alias("term"))
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("f"))
-        )
+    from pdf_brain_spark.suites import doc_tokens, source_term_counts
+
+    # Input: the suite_term_stats (source, term, c) counts, folded to
+    # the corpus term frequency by an exact integer sum.
+    counts = shared_counts
+    if counts is None:
+        counts = source_term_counts(doc_tokens(spark, sf_dir))
+    freq = counts.groupBy("term").agg(F.sum("c").alias("f"))
     w = Window.orderBy(F.col("f").desc(), F.col("term").asc())
     pts = (
         freq.select(
@@ -1862,7 +1848,7 @@ def source_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup.SHINGLE_DF_CAP caps docs. One shingle-grain shuffle, one
     pair-grain aggregate."""
     from pdf_brain_spark.functions.guards import spread_scan
-    from pdf_brain_spark.functions.text import shingles, tokenize, tokenize_sql
+    from pdf_brain_spark.functions.text import shingles, tokenize_sql
 
     # r16: spread the single-task scan ahead of the shingle chain
     # (guide §2.5; exact-integer counts, partitioning-insensitive)
@@ -2129,22 +2115,15 @@ def g2_collocations(
     score. Plan: one bigram-count shuffle (occurrences, not distinct),
     two marginal re-aggregates broadcast back, a 20-row TakeOrdered;
     the O11 ≥ 5 support floor bounds the scored set."""
-    from pdf_brain_spark.functions.text import shingles, tokenize, tokenize_sql
+    from pdf_brain_spark.functions.text import shingles
+    from pdf_brain_spark.suites import doc_tokens
 
-    # r16 A/B: spread_scan here measured +0.16 s (0.99→1.15 warm min) —
-    # the 2-gram chain sits just under the exchange+probe break-even.
-    # Reverted (see OPTIMIZATION_r16.md).
-    # r17: `shared_toks` (suite_term_stats shared token arrays) skips
-    # the tokenize pass; the 2-gram shingle runs off the checkpoint.
-    if shared_toks is not None:
-        bi = shared_toks.select(
-            F.explode(shingles(F.col("_toks"), 2)).alias("bigram")
-        )
-    else:
-        docs = load_table(spark, "documents", sf_dir)
-        bi = docs.select(
-            F.explode(shingles(tokenize_sql("text"), 2)).alias("bigram")
-        )
+    # Input: the suite_term_stats token arrays; the 2-gram shingle runs
+    # off them.
+    toks = shared_toks
+    if toks is None:
+        toks = doc_tokens(spark, sf_dir)
+    bi = toks.select(F.explode(shingles("_toks", 2)).alias("bigram"))
     o = bi.groupBy("bigram").agg(F.count(F.lit(1)).alias("o11"))
     o = o.withColumn("w1", F.substring_index("bigram", " ", 1)).withColumn(
         "w2", F.substring_index("bigram", " ", -1)
@@ -4116,29 +4095,19 @@ def heaps_law_fit(
     and the pair is what training-data QA actually plots). One
     (source, term) aggregate, 20 integer micro-nat points, the shared
     OLS closed form (regression_fit_exprs)."""
-    from pdf_brain_spark.functions.text import tokenize
     from pdf_brain_spark.streaming.events import regression_fit_exprs
+    from pdf_brain_spark.suites import doc_tokens, source_term_counts
 
-    # r16 A/B: spread_scan here measured +0.31 s (0.64→0.95 warm min) —
-    # reverted (tokenize-only chain; see OPTIMIZATION_r16.md).
-    # r17: from `shared_counts` (suite_term_stats shared (source, term,
-    # c)): n_tokens = Σc per source, vocab = row count per source —
-    # exact integer identities of the exploded aggregate.
-    if shared_counts is not None:
-        m0 = shared_counts.groupBy("source").agg(
-            F.sum("c").alias("n_tokens"),
-            F.count(F.lit(1)).alias("vocab"),
-        )
-    else:
-        docs = load_table(spark, "documents", sf_dir)
-        m0 = (
-            docs.select("source", F.explode(tokenize("text")).alias("term"))
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).alias("n_tokens"),
-                F.countDistinct("term").alias("vocab"),
-            )
-        )
+    # Input: the suite_term_stats (source, term, c) counts: n_tokens =
+    # Σc per source, vocab = row count per source — exact integer
+    # identities of the exploded aggregate.
+    counts = shared_counts
+    if counts is None:
+        counts = source_term_counts(doc_tokens(spark, sf_dir))
+    m0 = counts.groupBy("source").agg(
+        F.sum("c").alias("n_tokens"),
+        F.count(F.lit(1)).alias("vocab"),
+    )
     pts = m0.select(
         F.round(F.log(F.col("n_tokens").cast("double")) * 1_000_000)
         .cast("long")
@@ -4641,7 +4610,7 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     you commit a corpus-wide cut. Same DF-capped inverted-index shape
     as dedup_ngram_jaccard (one shingle shuffle, zero all-pairs), one
     extra band aggregate."""
-    from pdf_brain_spark.functions.text import shingles, tokenize, tokenize_sql
+    from pdf_brain_spark.functions.text import shingles, tokenize_sql
 
     docs = load_table(spark, "documents", sf_dir)
     sh = docs.select(
@@ -5006,21 +4975,16 @@ def distinctive_terms_logodds(
     over the bounded (group × vocab) grid; the variance/z step of the
     full estimator is omitted (documented) — the point estimate is the
     ranking key."""
-    from pdf_brain_spark.functions.text import tokenize
+    from pdf_brain_spark.suites import doc_tokens
 
-    # r16 A/B: spread_scan here measured +0.28 s (0.90→1.18 warm min) —
-    # reverted (tokenize-only chain; see OPTIMIZATION_r16.md).
-    # r17: `shared_toks` (suite_term_stats shared token arrays) carries
-    # doc_id, so the parity split reads the checkpoint, not the corpus.
-    if shared_toks is not None:
-        toks = shared_toks.select(
-            (F.col("doc_id") % 2).alias("grp"), F.explode("_toks").alias("term")
-        )
-    else:
-        docs = load_table(spark, "documents", sf_dir)
-        toks = docs.select(
-            (F.col("doc_id") % 2).alias("grp"), F.explode(tokenize("text")).alias("term")
-        )
+    # Input: the suite_term_stats token arrays, which carry doc_id for
+    # the parity split.
+    toks = shared_toks
+    if toks is None:
+        toks = doc_tokens(spark, sf_dir)
+    toks = toks.select(
+        (F.col("doc_id") % 2).alias("grp"), F.explode("_toks").alias("term")
+    )
     cnt = toks.groupBy("grp", "term").agg(F.count(F.lit(1)).alias("c"))
     cnt = cnt.localCheckpoint(eager=True)  # totals, vocab, and the pivot reuse it
     tot = cnt.groupBy("grp").agg(F.sum("c").alias("n"))

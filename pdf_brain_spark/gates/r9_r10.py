@@ -3,11 +3,11 @@ rotation queues): quantization recall/compression reports, corpus
 profile sketches, packing/waterfill planners, BPE merge steps,
 discovery/sink roundtrips, calibration and shard-balance reports.
 
-Split out of the single-file pdf_brain_spark/queries.py at round 12
-(VERDICT r11 item 5). Import-order contract: pdf_brain_spark.queries
-imports the gates modules in REGISTRATION ORDER, so the @query side
-effects fill the registry exactly as the single-file layout did; the
-driver-facing surface (names, oracles, window) is byte-identical.
+Split out of the single-file pdf_brain_spark/queries.py at round 12.
+Import-order contract: the gates package (gates/__init__.py) imports
+the gates modules in REGISTRATION ORDER, so the @query side effects
+fill the registry exactly as the single-file layout did, whichever
+gates module a process imports first.
 """
 
 from __future__ import annotations

@@ -307,7 +307,7 @@ def curation_weighted_sample(
     nov = novelty_scores(docs, k=novelty_k, id_col=id_col, text_col=text_col).select(
         id_col, "novelty"
     )
-    q = quality_score(F.col(text_col))
+    q = quality_score(text_col)
     weighted = (
         docs.select(id_col, text_col)
         .join(nov, id_col)
@@ -513,12 +513,7 @@ def column_profile(df: DataFrame, columns: list[str]) -> DataFrame:
     )
 
 
-def pmi_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_pair: int = 5,
-    toks: DataFrame | None = None,
-) -> DataFrame:
+def pmi_pairs(docs: DataFrame, text_col: str = "text", min_pair: int = 5) -> DataFrame:
     """Pointwise mutual information of ADJACENT token bigrams —
     collocation/phrase mining (Church & Hanks 1990): which words follow
     each other more often than their marginals predict?
@@ -549,14 +544,15 @@ def pmi_pairs(
     # prefer a reliable `spark.checkpoint` dir for this table. Not
     # conditioned like spread_scan: the pass-sharing is what matters at
     # every scale, and the storage cost is bounded by token bytes.
-    # r17: callers that already hold a materialized token-array table
-    # (the suite_term_stats shared pass) pass it as `toks` (column
-    # `_t`); the ≥2-token filter is applied here either way.
-    if toks is None:
-        toks = docs.select(tokenize(text_col).alias("_t")).localCheckpoint(eager=True)
-    else:
-        toks = toks.select("_t")
-    toks = toks.filter(F.size("_t") >= 2)
+    toks = docs.select(tokenize(text_col).alias("_t")).localCheckpoint(eager=True)
+    return pmi_from_tokens(toks, min_pair)
+
+
+def pmi_from_tokens(toks: DataFrame, min_pair: int = 5) -> DataFrame:
+    """pmi_pairs over a materialized token-array table (column `_t`),
+    for callers that already hold one (the suite_term_stats members).
+    The ≥2-token filter is applied here."""
+    toks = toks.select("_t").filter(F.size("_t") >= 2)
     totals = toks.agg(
         F.sum(F.size("_t")).alias("t_tokens"),
         F.sum(F.size("_t") - 1).alias("b_slots"),
@@ -663,12 +659,7 @@ def grouped_ols(
     )
 
 
-def token_entropy(
-    docs: DataFrame,
-    group_col: str,
-    text_col: str = "text",
-    counts: DataFrame | None = None,
-) -> DataFrame:
+def token_entropy(docs: DataFrame, group_col: str, text_col: str = "text") -> DataFrame:
     """Shannon entropy of the token distribution per group, in integer
     micro-nats: H = ln T − (1/T)·Σ n·ln n becomes
     round(ln(T)·1e6) − (Σ n·round(ln(n)·1e6)) DIV T — each ln is a
@@ -679,19 +670,21 @@ def token_entropy(
     evenness ratio.
 
     Shape: one (group, term) groupBy then one group groupBy, both
-    map-side-combinable; output is one row per group.
-
-    ``counts``: optional pre-computed (group_col, term, n) occurrence
-    table (r17 suite_term_stats shared pass) — must equal the groupBy
-    below exactly; when given, the tokenize pass is skipped."""
+    map-side-combinable; output is one row per group."""
     # r16 A/B: spread_scan here measured +0.25 s (0.67→0.92 warm min) —
     # reverted (tokenize-only chain; see OPTIMIZATION_r16.md).
-    if counts is None:
-        counts = (
-            docs.select(F.col(group_col), F.explode(tokenize(text_col)).alias("term"))
-            .groupBy(group_col, "term")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
+    counts = (
+        docs.select(F.col(group_col), F.explode(tokenize(text_col)).alias("term"))
+        .groupBy(group_col, "term")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    return token_entropy_from_counts(counts, group_col)
+
+
+def token_entropy_from_counts(counts: DataFrame, group_col: str) -> DataFrame:
+    """token_entropy over a pre-computed (group_col, term, n) occurrence
+    table, for callers that already hold one (the suite_term_stats
+    members)."""
     ln_micro = F.round(F.log(F.col("n").cast("double")) * 1000000).cast("long")
     agg = counts.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_terms"),

@@ -409,30 +409,6 @@ def label_centroids(
     )
 
 
-def nearest_concept(
-    centroids_df: DataFrame,
-    concepts: DataFrame,
-    threshold: float = 0.5,
-    cent_col: str = "centroid",
-    concept_vec_col: str = "embedding",
-) -> DataFrame:
-    """Cluster→concept: argmax cosine(centroid, concept_emb) ≥ threshold
-    (ClusterConceptMapper.ts:80-117). Concepts broadcast (dimension-sized)."""
-    from pyspark.sql import Window
-
-    from pdf_brain_spark.functions.vector import cosine_similarity
-
-    crossed = centroids_df.crossJoin(F.broadcast(concepts)).withColumn(
-        "sim", cosine_similarity(F.col(cent_col), F.col(concept_vec_col))
-    )
-    w = Window.partitionBy("cluster_id").orderBy(F.col("sim").desc())
-    return (
-        crossed.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("sim") >= threshold))
-        .drop("rn", cent_col, concept_vec_col)
-    )
-
-
 def quantized_d2(vec_col, const: list[int]):
     """Exact-integer squared L2 distance between a milli-quantized
     array<long> column and a CONSTANT integer vector — THE shared
@@ -699,6 +675,13 @@ def assign_stats_exact_int(
     k = len(cmat)
     dim = len(cmat[0])
     comp_bound = math.isqrt((1 << 51) // dim)
+    c_max = max(abs(int(x)) for c in cmat for x in c)
+    if c_max >= comp_bound:
+        raise ValueError(
+            f"assign_stats_exact_int: centroid |component| {c_max} >= "
+            f"sqrt(2^51/dim) = {comp_bound} (dim={dim}) breaks the "
+            "float64-exact distance contract; lower the scale"
+        )
     c_np_src = [list(c) for c in cmat]
 
     def fn(it):

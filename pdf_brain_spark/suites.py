@@ -433,16 +433,35 @@ def _suite_oracle_sql(suite: str, oracles: dict[str, str]) -> str:
     return f"SELECT * FROM (\n{body}\n) __s ORDER BY gate, rn"
 
 
+def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, source, _toks): the corpus token arrays, lazily. One of
+    the two inputs every suite_term_stats member reads — the suite
+    checkpoints it once; a standalone member call reads it as a plain
+    subplan. No spread_scan ahead of the tokenize: on this tokenize-only
+    chain it measured a net loss for every member (OPTIMIZATION_r16.md)."""
+    from pdf_brain_spark.functions.text import tokenize
+    from pdf_brain_spark.sources.loaders import load_table
+
+    docs = load_table(spark, "documents", sf_dir)
+    return docs.select("doc_id", "source", tokenize("text").alias("_toks"))
+
+
+def source_term_counts(toks: DataFrame) -> DataFrame:
+    """(source, term, c): per-source term occurrence counts over a
+    doc_tokens() table, lazily — the other suite_term_stats input."""
+    return (
+        toks.select("source", F.explode("_toks").alias("term"))
+        .groupBy("source", "term")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+
+
 def _term_stats_shared_inputs(spark: SparkSession, sf_dir: str) -> dict:
     """ONE tokenize pass + ONE (source, term, c) occurrence aggregate
-    feeding all 8 suite_term_stats members (r17 optimization, guide
-    §2.4: the suite previously re-tokenized the whole corpus once PER
-    member — 8 scans of `documents` for one suite row). Both tables are
-    exact-integer identical to what each member's fallback path computes
-    (the members assert the schemas they consume), so every member's
-    result — and the suite hash — is unchanged; the standalone member
-    gates (oracle harness, MEMBER_ALIASES) still run their own
-    fallback pipelines with unchanged plans.
+    feeding all 8 suite_term_stats members (one corpus scan per suite
+    row instead of one per member). The members read the same
+    doc_tokens()/source_term_counts() inputs when run standalone, so the
+    suite and standalone results come from one pipeline.
 
     100 TB posture (same deliberate trade as pmi_pairs, VERDICT r16
     item 7): `localCheckpoint` pins the token arrays and the counts to
@@ -450,19 +469,8 @@ def _term_stats_shared_inputs(spark: SparkSession, sf_dir: str) -> dict:
     → 1 is what matters at every scale; on executor loss the suite
     fails fast instead of recomputing. A reliable `spark.checkpoint`
     dir is the production alternative."""
-    from pdf_brain_spark.functions.text import tokenize
-    from pdf_brain_spark.sources.loaders import load_table
-
-    docs = load_table(spark, "documents", sf_dir)
-    toks = docs.select(
-        "doc_id", "source", tokenize("text").alias("_toks")
-    ).localCheckpoint(eager=True)
-    counts = (
-        toks.select("source", F.explode("_toks").alias("term"))
-        .groupBy("source", "term")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
+    toks = doc_tokens(spark, sf_dir).localCheckpoint(eager=True)
+    counts = source_term_counts(toks).localCheckpoint(eager=True)
     return {
         "source_token_entropy": {"shared_counts": counts},
         "source_term_jsd": {"shared_counts": counts},

@@ -111,7 +111,9 @@ def test_assign_stats_matches_hof_ladder_fuzz(spark):
 
 def test_assign_stats_bound_guard(spark):
     """Components at/above the dim-aware float64-exactness bound must
-    raise by name (same contract as kmeans_fit_exact_int)."""
+    raise by name (same contract as kmeans_fit_exact_int): in the input
+    vectors, when the kernel runs, and in the centroid matrix, when the
+    function is entered."""
     import math
 
     from pdf_brain_spark.operators.clustering import assign_stats_exact_int
@@ -127,6 +129,8 @@ def test_assign_stats_bound_guard(spark):
     q = spark.createDataFrame(pdf, "vec_id long, q array<long>")
     with pytest.raises(Exception, match="float64-exact"):
         assign_stats_exact_int(q, [[0, 0], [1, 1]]).collect()
+    with pytest.raises(ValueError, match="assign_stats_exact_int: .*float64-exact"):
+        assign_stats_exact_int(q, [[0, 0], [-bound, 1]])
 
 
 def test_minhash_signatures_exprstr_matches_lambda_form(spark):

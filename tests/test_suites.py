@@ -57,7 +57,7 @@ def test_reattest_picks_match_seed_rule():
         _reattest_picks,
     )
 
-    assert REATTEST == _reattest_picks(REATTEST_ROUND, N_REATTEST) if N_REATTEST else REATTEST == []
+    assert REATTEST == (_reattest_picks(REATTEST_ROUND, N_REATTEST) if N_REATTEST else [])
     # r17: the 9-slot tail is ENTIRELY changed-plan slots (VERDICT r16
     # item 8 — the r16 optimization round's DAG-changed gates take
     # precedence over the re-attest pool), so the re-attest pick is
@@ -214,6 +214,43 @@ def test_install_suites_is_idempotent():
     before = list(q.QUERIES)
     install_suites(q.QUERIES, q.ORACLES, q.CONSOLIDATED)
     assert list(q.QUERIES) == before
+
+
+_REGISTRY_ORDER_PROBE = (
+    "import importlib, json, sys\n"
+    "importlib.import_module(sys.argv[1])\n"
+    "import pdf_brain_spark.queries as q\n"
+    "print(json.dumps([list(q.QUERIES), list(q.ORACLES), list(q.CONSOLIDATED)]))\n"
+)
+
+
+def _registry_order_after(first_module: str) -> list:
+    """list(QUERIES), list(ORACLES), list(CONSOLIDATED) in a fresh
+    interpreter that imports `first_module` before the registry."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _REGISTRY_ORDER_PROBE, first_module],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
+
+
+@pytest.mark.parametrize("first", ["pdf_brain_spark.gates.r11", "pdf_brain_spark.gates.r9_r10"])
+def test_registration_order_holds_whichever_gates_module_imports_first(first):
+    """The gates package imports its modules in registration order, so
+    a process that imports one gates module before the registry builds
+    the same QUERIES/ORACLES/CONSOLIDATED order as a plain
+    `import pdf_brain_spark.queries`. r9_r10 imports r8_corpus_b at its
+    top, so without the package-level order its gates would register
+    ahead of composites and r8_corpus_a."""
+    assert _registry_order_after(first) == _registry_order_after(
+        "pdf_brain_spark.queries"
+    )
 
 
 def test_float_canon_nan_inf_sentinels_match_both_engines(spark):
