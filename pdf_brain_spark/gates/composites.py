@@ -29,7 +29,7 @@ from pdf_brain_spark.registry import (  # noqa: F401
     query,
 )
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
-from pdf_brain_spark.gates.core import FTS_QUERY_TERMS, _DUCK_QUANT_X, _duck_cosine_distance  # noqa: F401
+from pdf_brain_spark.gates.core import FTS_QUERY_TERMS, _DUCK_QUANT_X, _duck_cosine_distance, staged_stream  # noqa: F401
 from pdf_brain_spark.gates.quality_temporal import _duck_kmeans_rss  # noqa: F401
 
 # --------------------------------------------------------------------------
@@ -852,34 +852,20 @@ def documents_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_incremental_topk_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming EXACT heavy hitters (streaming/events.py::
-    streaming_incremental_term_counts): the documents table streams in
-    as two micro-batches of vocabulary-grain count partials on the
-    generation store; the served top-25 must equal the one-shot count
-    over the whole corpus — integer partials merge exactly whatever
-    order generations land in. A real AvailableNow run per invocation."""
-    import shutil
-    import tempfile
-
-    from pdf_brain_spark.streaming.events import (
-        read_top_terms,
-        streaming_incremental_term_counts,
-    )
+    TERM_COUNT_PARTIALS): the documents table streams in as two
+    micro-batches of vocabulary-grain count partials on the generation
+    store; the served top-25 must equal the one-shot count over the
+    whole corpus — integer partials merge exactly whatever order
+    generations land in. A real AvailableNow run per invocation."""
+    from pdf_brain_spark.streaming.events import TERM_COUNT_PARTIALS, read_top_terms
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="sgraft_terms_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "store", "ckpt"))
-    try:
-        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_term_counts(spark, stream, store, ckpt).awaitTermination()
-        return read_top_terms(spark, store, k=25).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return staged_stream(
+        spark,
+        [docs.filter(F.col("doc_id") % 2 == 0), docs.filter(F.col("doc_id") % 2 == 1)],
+        TERM_COUNT_PARTIALS.writer,
+        lambda store: read_top_terms(spark, store, k=25),
+    )
 
 
 @query(
@@ -1581,39 +1567,27 @@ ORACLES["hamming_ann_batch16"] = _hamming_batch_oracle()
 @query("streaming_incremental_fts", oracle=None)  # oracle registered below
 def streaming_incremental_fts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental FTS index (streaming/events.py::
-    streaming_fts_ingest): the documents table streams in as two
+    make_fts_postings_batch_fn): the documents table streams in as two
     micro-batches of postings generations; BM25 served FROM THE
     PERSISTED INDEX (corpus stats derived from the same postings) must
     equal the one-shot BM25 over the whole corpus — the oracle is the
     identical DuckDB twin the fts_bm25 gate uses. A real AvailableNow
     run per invocation; completes the incremental-index trio (band
     index for dedup, IVF for vectors, postings for text)."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import (
         fts_search_persisted,
-        streaming_fts_ingest,
+        make_fts_postings_batch_fn,
     )
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="sgraft_fts_")
-    stage, idx, ckpt = (f"{root}/{d}" for d in ("stage", "index", "ckpt"))
-    try:
-        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_fts_ingest(spark, stream, idx, ckpt).awaitTermination()
-        res = fts_search_persisted(spark, idx, FTS_QUERY_TERMS, k=10)
-        return res.select(
+    return staged_stream(
+        spark,
+        [docs.filter(F.col("doc_id") % 2 == 0), docs.filter(F.col("doc_id") % 2 == 1)],
+        make_fts_postings_batch_fn,
+        lambda idx: fts_search_persisted(spark, idx, FTS_QUERY_TERMS, k=10).select(
             "doc_id", F.round("bm25", 6).alias("bm25"), "terms_matched"
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ),
+    )
 
 
 def _register_streaming_fts_oracle() -> None:
@@ -1627,39 +1601,25 @@ _register_streaming_fts_oracle()
 
 @query("streaming_incremental_ohlc", oracle=None)  # oracle shared below
 def streaming_incremental_ohlc_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming incremental OHLC bars (streaming/events.py) — the first
-    NON-SUM instantiation of the mergeable-partials store: open/close
-    merge by min/max over (us, event_id, cents) ordering structs, which
-    is associative, so bars served from two micro-batch generations
-    must equal the one-shot ohlc_bars over the whole table (the shared
-    events_ohlc_bars oracle). A real AvailableNow run per invocation;
-    no watermark — a late event is one more partial row whose struct
-    wins or loses the min/max."""
-    import shutil
-    import tempfile
-
-    from pdf_brain_spark.streaming.events import (
-        read_ohlc,
-        streaming_incremental_ohlc,
-    )
+    """Streaming incremental OHLC bars (streaming/events.py::
+    OHLC_PARTIALS) — the first NON-SUM instantiation of the
+    mergeable-partials store: open/close merge by min/max over (us,
+    event_id, cents) ordering structs, which is associative, so bars
+    served from two micro-batch generations must equal the one-shot
+    ohlc_bars over the whole table (the shared events_ohlc_bars oracle).
+    A real AvailableNow run per invocation; no watermark — a late event
+    is one more partial row whose struct wins or loses the min/max."""
+    from pdf_brain_spark.streaming.events import OHLC_PARTIALS, read_ohlc
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_ohlc_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "store", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_ohlc(spark, stream, store, ckpt).awaitTermination()
-        return read_ohlc(spark, store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return staged_stream(
+        spark,
+        [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
+        OHLC_PARTIALS.writer,
+        lambda store: read_ohlc(spark, store),
+    )
 
 
 ORACLES["streaming_incremental_ohlc"] = ORACLES["events_ohlc_bars"]
@@ -1770,44 +1730,21 @@ def streaming_rollup_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what makes an earlier training run's input reproducible without
     extra bookkeeping. A real AvailableNow run per invocation.
 
-    Unlike every other streaming gate here, this one DEPENDS on which
-    staged file becomes batch 0 — the file source orders by
-    ms-granularity modification time with nondeterministic tie order,
-    so the even-parity file's mtime is explicitly backdated below to
-    pin the batch order (the merged-result gates are order-independent
-    and don't need this)."""
-    import os
-    import shutil
-    import tempfile
-
-    from pdf_brain_spark.streaming.events import (
-        read_rollup,
-        streaming_incremental_rollup,
-    )
+    This gate, like streaming_rollup_write_travel and
+    streaming_incremental_novelty, DEPENDS on which staged slice becomes
+    batch 0 — staged_stream pins the batch order to the slice order (the
+    merged-result gates are order-independent)."""
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS, read_rollup
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_tt_")
-    stage, roll, ckpt = (f"{root}/{d}" for d in ("stage", "rollup", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        first_files = [
-            f"{stage}/{f}" for f in os.listdir(stage) if f.endswith(".parquet")
-        ]
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        for f in first_files:
-            st = os.stat(f)
-            os.utime(f, (st.st_atime, st.st_mtime - 10))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_rollup(spark, stream, roll, ckpt).awaitTermination()
-        return read_rollup(spark, roll, asof_batch_id=0).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return staged_stream(
+        spark,
+        [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
+        ROLLUP_PARTIALS.writer,
+        lambda roll: read_rollup(spark, roll, asof_batch_id=0),
+    )
 
 
 @query(

@@ -33,6 +33,52 @@ from pdf_brain_spark.registry import (  # noqa: F401
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
 
 
+def staged_stream(
+    spark: SparkSession,
+    slices: list[DataFrame],
+    writer: Callable,
+    serve: Callable[[str], DataFrame],
+) -> DataFrame:
+    """Run a REAL Structured Streaming pass for a streaming gate: stage
+    each slice as one parquet file, stream them one file per micro-batch
+    (AvailableNow, maxFilesPerTrigger=1) through the foreachBatch body
+    `writer(store_dir)`, and return `serve(store_dir)` — checkpointed,
+    because the store lives in a scratch dir that is removed on return.
+
+    Slice i is batch i. The file source orders its files by
+    millisecond modification time and breaks ties arbitrarily, and two
+    small writes often land in one millisecond, so once every slice is
+    written the files' mtimes are set one second apart in slice order."""
+    import shutil
+    import tempfile
+    import time
+
+    from pdf_brain_spark.streaming.generations import drive_available_now
+
+    root = tempfile.mkdtemp(prefix="sgraft_stream_")
+    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "store", "ckpt"))
+    try:
+        staged: list[list[str]] = []
+        for part in slices:
+            before = set(os.listdir(stage)) if os.path.isdir(stage) else set()
+            part.coalesce(1).write.mode("append").parquet(stage)
+            staged.append(
+                [f for f in set(os.listdir(stage)) - before if f.endswith(".parquet")]
+            )
+        t0 = time.time() - len(staged)
+        for i, names in enumerate(staged):
+            for name in names:
+                os.utime(f"{stage}/{name}", (t0 + i, t0 + i))
+        stream = (
+            spark.readStream.schema(slices[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+        )
+        drive_available_now(stream, writer(store), ckpt)
+        return serve(store).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
 
 # --------------------------------------------------------------------------
 # Vector search (SURVEY §2.9 M1/M2, §2.3 J1, §2.5 W1)

@@ -30,7 +30,7 @@ from pdf_brain_spark.registry import (  # noqa: F401
     query,
 )
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
-from pdf_brain_spark.gates.core import _CHUNK_ORACLE_CTE, _DUCK_CENTROIDS, _DUCK_COS, _DUCK_EUCLID, _DUCK_MINHASH_BANDED, _DUCK_MINHASH_SIG, _DUCK_NORM, _DUCK_SHINGLES, _duck_cosine_distance  # noqa: F401
+from pdf_brain_spark.gates.core import _CHUNK_ORACLE_CTE, _DUCK_CENTROIDS, _DUCK_COS, _DUCK_EUCLID, _DUCK_MINHASH_BANDED, _DUCK_MINHASH_SIG, _DUCK_NORM, _DUCK_SHINGLES, _duck_cosine_distance, staged_stream  # noqa: F401
 
 # --------------------------------------------------------------------------
 # Data-quality gate (SURVEY §2.2 P10) + model selection (§2.4 A5) +
@@ -3547,43 +3547,28 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_incremental_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming run of the continuous-crawl dedup
-    (streaming/events.py::streaming_incremental_dedup, previously
-    pytest-only): documents staged as two arrival files, streamed one
-    file per micro-batch through the foreachBatch probe-then-append
-    driver against the persisted banded LSH index. The accumulated
-    candidate subdirs, distinct over (doc_a, doc_b), must equal the
-    one-shot full-corpus LSH banding the oracle computes — within-batch
-    pairs come from each batch's self-probe, cross-batch pairs from
-    probing the batch_id < N index partitions, nothing lost. Replay
-    idempotency of the per-batch writes is separately pytest-attested
+    (streaming/events.py::make_incremental_dedup_batch_fn): documents
+    staged as two arrival files, streamed one file per micro-batch
+    through the foreachBatch probe-then-append body against the
+    persisted banded LSH index. The accumulated candidate subdirs,
+    distinct over (doc_a, doc_b), must equal the one-shot full-corpus
+    LSH banding the oracle computes — within-batch pairs come from each
+    batch's self-probe, cross-batch pairs from probing the batch_id < N
+    index partitions, nothing lost. Replay idempotency of the per-batch
+    writes is separately pytest-attested
     (tests/test_ingest_and_streaming.py)."""
-    import shutil
-    import tempfile
-
-    from pdf_brain_spark.streaming.events import streaming_incremental_dedup
+    from pdf_brain_spark.streaming.events import make_incremental_dedup_batch_fn
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="sgraft_sid_")
-    stage, idx, cands, ckpt = (f"{root}/{d}" for d in ("stage", "idx", "cands", "ckpt"))
-    try:
-        docs.filter(F.col("doc_id") < 400).coalesce(1).write.mode("append").parquet(stage)
-        docs.filter(F.col("doc_id") >= 400).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = streaming_incremental_dedup(spark, stream, idx, cands, ckpt)
-        q.awaitTermination()
-        return (
-            spark.read.parquet(cands)
-            .select("doc_a", "doc_b")
-            .distinct()
-            .orderBy("doc_a", "doc_b")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return staged_stream(
+        spark,
+        [docs.filter(F.col("doc_id") < 400), docs.filter(F.col("doc_id") >= 400)],
+        lambda d: make_incremental_dedup_batch_fn(spark, f"{d}/idx", f"{d}/cands"),
+        lambda d: spark.read.parquet(f"{d}/cands")
+        .select("doc_a", "doc_b")
+        .distinct()
+        .orderBy("doc_a", "doc_b"),
+    )
 
 
 @query(
@@ -3607,7 +3592,7 @@ def streaming_incremental_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming run of the incremental ANN index maintenance
     (streaming/ann_ingest.py): the embeddings table staged as two arrival
     files, streamed one file per micro-batch through the foreachBatch
-    assign-and-append driver into the batch_id=N/list_id=L partitioned
+    assign-and-append body into the batch_id=N/list_id=L partitioned
     layout, then searched FROM STORAGE with an EXHAUSTIVE probe
     (n_probes = n_lists, the ann_ivf_topk invariant). The result must
     equal brute-force top-k over the whole table — which certifies the
@@ -3615,13 +3600,10 @@ def streaming_incremental_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing in two batch generations would appear twice in the ordered
     top-k and flip the hash). Probe pruning and replay idempotency are
     pytest-attested (tests/test_ingest_and_streaming.py)."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.operators.clustering import kmeans_assign
     from pdf_brain_spark.streaming.ann_ingest import (
         ivf_search_persisted,
-        streaming_ann_ingest,
+        make_ann_ingest_batch_fn,
     )
 
     emb = load_table(spark, "embeddings", sf_dir).select("vec_id", "label", "embedding")
@@ -3630,29 +3612,20 @@ def streaming_incremental_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the centroids are used, each micro-batch runs its own map-only assign
     _, centroids = kmeans_assign(emb, k=16, seed=42)
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 9).first()["embedding"]]
-    root = tempfile.mkdtemp(prefix="sgraft_sann_")
-    stage, idx, ckpt = (f"{root}/{d}" for d in ("stage", "idx", "ckpt"))
-    try:
-        mid = emb.agg(F.expr("percentile(vec_id, 0.5)")).first()[0]
-        emb.filter(F.col("vec_id") <= mid).coalesce(1).write.mode("append").parquet(stage)
-        emb.filter(F.col("vec_id") > mid).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_ann_ingest(spark, stream, idx, centroids, ckpt).awaitTermination()
-        res = ivf_search_persisted(
+    mid = emb.agg(F.expr("percentile(vec_id, 0.5)")).first()[0]
+    return staged_stream(
+        spark,
+        [emb.filter(F.col("vec_id") <= mid), emb.filter(F.col("vec_id") > mid)],
+        lambda idx: make_ann_ingest_batch_fn(idx, centroids),
+        lambda idx: ivf_search_persisted(
             spark, idx, centroids, qvec, k=12, n_probes=16
-        )
-        return res.select(
+        ).select(
             "vec_id",
             "label",
             (F.round("distance", 6) + F.lit(0.0)).alias("distance"),
             F.round("score", 6).alias("score"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ),
+    )
 
 
 @query(
@@ -3684,31 +3657,19 @@ def streaming_ann_deletion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost. The tombstone dir's reader-safety, compaction
     materialization, and post-floor re-ingest semantics are
     pytest-attested (test_index_deletion_tombstones)."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.operators.clustering import kmeans_assign
     from pdf_brain_spark.streaming.ann_ingest import (
         delete_vectors,
         ivf_search_persisted,
-        streaming_ann_ingest,
+        make_ann_ingest_batch_fn,
     )
 
     emb = load_table(spark, "embeddings", sf_dir).select("vec_id", "label", "embedding")
     _, centroids = kmeans_assign(emb, k=16, seed=42)
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 9).first()["embedding"]]
-    root = tempfile.mkdtemp(prefix="sgraft_sdel_")
-    stage, idx, ckpt = (f"{root}/{d}" for d in ("stage", "idx", "ckpt"))
-    try:
-        mid = emb.agg(F.expr("percentile(vec_id, 0.5)")).first()[0]
-        emb.filter(F.col("vec_id") <= mid).coalesce(1).write.mode("append").parquet(stage)
-        emb.filter(F.col("vec_id") > mid).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_ann_ingest(spark, stream, idx, centroids, ckpt).awaitTermination()
+    mid = emb.agg(F.expr("percentile(vec_id, 0.5)")).first()[0]
+
+    def serve(idx: str) -> DataFrame:
         delete_vectors(
             spark, idx, emb.filter(F.col("vec_id") % 7 == 3).select("vec_id"), 1
         )
@@ -3718,9 +3679,14 @@ def streaming_ann_deletion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             (F.round("distance", 6) + F.lit(0.0)).alias("distance"),
             F.round("score", 6).alias("score"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        )
+
+    return staged_stream(
+        spark,
+        [emb.filter(F.col("vec_id") <= mid), emb.filter(F.col("vec_id") > mid)],
+        lambda idx: make_ann_ingest_batch_fn(idx, centroids),
+        serve,
+    )
 
 
 @query(
@@ -3737,40 +3703,26 @@ def streaming_ann_deletion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_incremental_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming run of incremental rollup maintenance
-    (streaming/events.py::streaming_incremental_rollup): events staged
-    as two arrival files SPLIT BY PARITY — so the second micro-batch is
-    all late data for hours the first batch already covered — streamed
-    through the foreachBatch partials writer, then served via
-    read_rollup's re-aggregation. The result must equal the one-shot
-    batch hourly rollup: partials from different batches for the same
-    (type, hour) must combine losslessly, which is the whole design
-    (count/sum are associative; no read-modify-write of existing
-    buckets, no watermark needed for correctness)."""
-    import shutil
-    import tempfile
-
-    from pdf_brain_spark.streaming.events import (
-        read_rollup,
-        streaming_incremental_rollup,
-    )
+    (streaming/events.py::ROLLUP_PARTIALS): events staged as two arrival
+    files SPLIT BY PARITY — so the second micro-batch is all late data
+    for hours the first batch already covered — streamed through the
+    foreachBatch partials writer, then served via read_rollup's
+    re-aggregation. The result must equal the one-shot batch hourly
+    rollup: partials from different batches for the same (type, hour)
+    must combine losslessly, which is the whole design (count/sum are
+    associative; no read-modify-write of existing buckets, no watermark
+    needed for correctness)."""
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS, read_rollup
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_sroll_")
-    stage, roll, ckpt = (f"{root}/{d}" for d in ("stage", "rollup", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_rollup(spark, stream, roll, ckpt).awaitTermination()
-        return read_rollup(spark, roll).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return staged_stream(
+        spark,
+        [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
+        ROLLUP_PARTIALS.writer,
+        lambda roll: read_rollup(spark, roll),
+    )
 
 
 @query(
@@ -4091,41 +4043,30 @@ def tfidf_top_terms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_incremental_percentiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming run of incremental percentile maintenance
-    (streaming/events.py::streaming_incremental_percentiles): exact
-    percentiles are normally un-incremental, but a CENT-RESOLUTION
-    histogram is a mergeable sketch whose quantiles of the cent-rounded
-    distribution are exact — so the foreachBatch partials (event_type,
-    cent bucket, n) merge by integer addition across arrival batches and
-    the served p50/p95/p99 must equal the one-shot batch computation,
-    which is the DuckDB oracle (type-1 quantile with the rank in integer
-    arithmetic on BOTH sides). Events staged as two parity-split arrival
-    files so the second micro-batch reshapes every bucket the first
-    already wrote."""
-    import shutil
-    import tempfile
-
+    (streaming/events.py::HISTOGRAM_PARTIALS): exact percentiles are
+    normally un-incremental, but a CENT-RESOLUTION histogram is a
+    mergeable sketch whose quantiles of the cent-rounded distribution
+    are exact — so the foreachBatch partials (event_type, cent bucket,
+    n) merge by integer addition across arrival batches and the served
+    p50/p95/p99 must equal the one-shot batch computation, which is the
+    DuckDB oracle (type-1 quantile with the rank in integer arithmetic
+    on BOTH sides). Events staged as two parity-split arrival files so
+    the second micro-batch reshapes every bucket the first already
+    wrote."""
     from pdf_brain_spark.streaming.events import (
+        HISTOGRAM_PARTIALS,
         read_histogram_percentiles,
-        streaming_incremental_percentiles,
     )
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_spct_")
-    stage, hist, ckpt = (f"{root}/{d}" for d in ("stage", "hist", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_percentiles(spark, stream, hist, ckpt).awaitTermination()
-        return read_histogram_percentiles(spark, hist).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return staged_stream(
+        spark,
+        [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
+        HISTOGRAM_PARTIALS.writer,
+        lambda hist: read_histogram_percentiles(spark, hist),
+    )
 
 
 @query(
@@ -4149,45 +4090,35 @@ def streaming_incremental_percentiles_q(spark: SparkSession, sf_dir: str) -> Dat
 )
 def streaming_rollup_backfill_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming run + REPAIR of the incremental rollup
-    (streaming/events.py::backfill_rollup): events stream in as two
-    parity micro-batches, then the FIRST HOUR of history turns out to be
-    wrong (every value doubled on re-measurement) and a backfill
+    (streaming/generations.py::backfill_partials): events stream in as
+    two parity micro-batches, then the FIRST HOUR of history turns out
+    to be wrong (every value doubled on re-measurement) and a backfill
     generation with floor=1 replaces that hour's additive partials with
     corrected ones — replacement semantics on the append-only store,
     reader-safe by namespace precedence. Served result must equal the
     one-shot batch rollup over the corrected fact table, which is the
     DuckDB oracle."""
-    import shutil
-    import tempfile
-
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        read_rollup,
-        streaming_incremental_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS, read_rollup
+    from pdf_brain_spark.streaming.generations import backfill_partials
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_sbf_")
-    stage, roll, ckpt = (f"{root}/{d}" for d in ("stage", "rollup", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_rollup(spark, stream, roll, ckpt).awaitTermination()
+
+    def repair_and_serve(roll: str) -> DataFrame:
         h0 = ev.agg(F.date_trunc("hour", F.min("ts")).alias("h")).first()["h"]
         corrected = ev.filter(
             F.date_trunc("hour", F.col("ts")) == F.lit(h0)
         ).withColumn("value", F.round(F.col("value") * 2, 2))
-        backfill_rollup(spark, roll, corrected, floor_batch_id=1)
-        return read_rollup(spark, roll).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        backfill_partials(spark, ROLLUP_PARTIALS, roll, corrected, floor_batch_id=1)
+        return read_rollup(spark, roll)
+
+    return staged_stream(
+        spark,
+        [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
+        ROLLUP_PARTIALS.writer,
+        repair_and_serve,
+    )
 
 
 @query(

@@ -30,7 +30,7 @@ from pdf_brain_spark.registry import (  # noqa: F401
     query,
 )
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
-from pdf_brain_spark.gates.core import _DUCK_MINHASH_BANDED, _DUCK_MINHASH_SIG, _DUCK_QUANT_X, _DUCK_SHINGLES, _duck_kmeans_fit  # noqa: F401
+from pdf_brain_spark.gates.core import _DUCK_MINHASH_BANDED, _DUCK_MINHASH_SIG, _DUCK_QUANT_X, _DUCK_SHINGLES, _duck_kmeans_fit, staged_stream  # noqa: F401
 
 # --------------------------------------------------------------------------
 # Round-11 additions — the round-12 queue (registered after this round's
@@ -646,44 +646,26 @@ def margin_knn_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_incremental_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental NOVELTY maintenance — first-seen tracking
     as the mergeable-partials store's min-struct monoid
-    (streaming/events.py::make_novelty_batch_fn): each batch writes its
+    (streaming/events.py::NOVELTY_PARTIALS): each batch writes its
     4-gram types with (batch, min doc) and the serve merges
     min(struct(fb, fd)) per type, so 'how much of THIS crawl increment
     is new text' is answered per increment without re-scanning history
     — the streaming dual of ngram_novelty_curve (which re-reads the
-    whole corpus each time). Two REAL AvailableNow runs on one
-    checkpoint: docs < 100 stage first (batch 0), the rest after
-    (batch 1) — the same exactly-once restart device as
-    directory_discovery_scan, which also pins the batch assignment
-    deterministically (contiguous ids make the merged first-seen equal
-    to the plain min-doc oracle). Min-struct merging is associative,
-    commutative, AND idempotent, so replay and compaction serve the
-    identical table (pytest walks write→compact→re-serve equality)."""
-    import shutil
-    import tempfile
-
-    from pdf_brain_spark.streaming.events import (
-        read_novelty,
-        streaming_incremental_novelty as drive_novelty,
-    )
+    whole corpus each time). Docs < 100 are batch 0 and the rest batch
+    1 (staged_stream pins that order; contiguous ids make the merged
+    first-seen equal to the plain min-doc oracle). Min-struct merging
+    is associative, commutative, AND idempotent, so replay and
+    compaction serve the identical table (pytest walks
+    write→compact→re-serve equality)."""
+    from pdf_brain_spark.streaming.events import NOVELTY_PARTIALS, read_novelty
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="sgraft_novelty_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "novelty", "ckpt"))
-    try:
-        docs.filter(F.col("doc_id") < 100).coalesce(1).write.mode(
-            "append"
-        ).parquet(stage)
-        stream = spark.readStream.schema(docs.schema).parquet(stage)
-        drive_novelty(spark, stream, store, ckpt).awaitTermination()
-        docs.filter(F.col("doc_id") >= 100).coalesce(1).write.mode(
-            "append"
-        ).parquet(stage)
-        stream = spark.readStream.schema(docs.schema).parquet(stage)
-        drive_novelty(spark, stream, store, ckpt).awaitTermination()
-        return read_novelty(spark, store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return staged_stream(
+        spark,
+        [docs.filter(F.col("doc_id") < 100), docs.filter(F.col("doc_id") >= 100)],
+        NOVELTY_PARTIALS.writer,
+        lambda store: read_novelty(spark, store),
+    )
 
 
 @query(

@@ -28,7 +28,7 @@ from pdf_brain_spark.registry import (  # noqa: F401
     query,
 )
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
-from pdf_brain_spark.gates.core import FTS_QUERY_TERMS, _DUCK_CENTROIDS, _DUCK_SHINGLES  # noqa: F401
+from pdf_brain_spark.gates.core import FTS_QUERY_TERMS, _DUCK_CENTROIDS, _DUCK_SHINGLES, staged_stream  # noqa: F401
 from pdf_brain_spark.gates.quality_temporal import _sub_shingle_cap  # noqa: F401
 from pdf_brain_spark.gates.composites import _hamming_batch_oracle  # noqa: F401
 
@@ -543,52 +543,37 @@ def streaming_rollup_write_travel(spark: SparkSession, sf_dir: str) -> DataFrame
     temporal='coverage' serves the corrected history — repaired buckets
     from the corrected slice only, untouched buckets from all events.
     Both views verified against independent one-shot SQL in one frame.
-    A real AvailableNow run + backfill per invocation; batch order
-    pinned by backdating the first file's mtime (the time-travel gate's
-    established play)."""
-    import os
-    import shutil
-    import tempfile
-
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        read_rollup,
-        streaming_incremental_rollup,
-    )
+    A real AvailableNow run + backfill per invocation; staged_stream
+    pins the batch order."""
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS, read_rollup
+    from pdf_brain_spark.streaming.generations import backfill_partials
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_btt_")
-    stage, roll, ckpt = (f"{root}/{d}" for d in ("stage", "rollup", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        first_files = [
-            f"{stage}/{f}" for f in os.listdir(stage) if f.endswith(".parquet")
-        ]
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        for f in first_files:
-            st = os.stat(f)
-            os.utime(f, (st.st_atime, st.st_mtime - 10))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_rollup(spark, stream, roll, ckpt).awaitTermination()
-        backfill_rollup(
-            spark, roll, ev.filter(F.col("event_id") % 4 == 0), floor_batch_id=1
+
+    def repair_and_serve(roll: str) -> DataFrame:
+        backfill_partials(
+            spark,
+            ROLLUP_PARTIALS,
+            roll,
+            ev.filter(F.col("event_id") % 4 == 0),
+            floor_batch_id=1,
         )
         write_view = read_rollup(spark, roll, asof_batch_id=1, temporal="write")
         coverage_view = read_rollup(spark, roll, asof_batch_id=1)
-        out = (
+        return (
             write_view.select(F.lit("write").alias("mode"), "*")
             .unionByName(coverage_view.select(F.lit("coverage").alias("mode"), "*"))
             .orderBy("mode", "event_type", "window_start")
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return staged_stream(
+        spark,
+        [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
+        ROLLUP_PARTIALS.writer,
+        repair_and_serve,
+    )
 
 
 @query(
@@ -1643,7 +1628,7 @@ def prefiltered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental DISTINCT-COUNT maintenance — the KMV
     sketch as the mergeable-partials store's first SET-VALUED monoid
-    (streaming/events.py::make_kmv_batch_fn): per-batch bottom-64
+    (streaming/events.py::KMV_PARTIALS): per-batch bottom-64
     distinct-hash partials merge by union-distinct-truncate, which is
     associative, commutative, AND idempotent, so however the stream
     batches (or a compaction) carved the data, the served estimate is
@@ -1652,31 +1637,17 @@ def streaming_incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     invocation. Incremental distinct counting is the canonical thing
     exact countDistinct cannot do without re-shuffling history; the
     sketch's persisted state is 64 longs per (group, live generation)."""
-    import shutil
-    import tempfile
-
-    from pdf_brain_spark.streaming.events import (
-        read_kmv,
-        streaming_incremental_kmv as drive_kmv,
-    )
+    from pdf_brain_spark.streaming.events import KMV_PARTIALS, read_kmv
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "user_id"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_kmv_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "kmv", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        drive_kmv(spark, stream, store, ckpt).awaitTermination()
-        return read_kmv(spark, store).orderBy("event_type").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return staged_stream(
+        spark,
+        [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
+        KMV_PARTIALS.writer,
+        lambda store: read_kmv(spark, store).orderBy("event_type"),
+    )
 
 
 @query(

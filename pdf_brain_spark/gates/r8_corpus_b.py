@@ -28,7 +28,7 @@ from pdf_brain_spark.registry import (  # noqa: F401
     query,
 )
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
-from pdf_brain_spark.gates.core import FTS_QUERY_TERMS  # noqa: F401
+from pdf_brain_spark.gates.core import FTS_QUERY_TERMS, staged_stream  # noqa: F401
 
 @query(
     "events_lead_lag_correlation",
@@ -1036,7 +1036,7 @@ def time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_incremental_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental MODEL FITTING — per-group OLS trend lines
     maintained as the partials store's first MOMENT-VECTOR monoid
-    (streaming/events.py::make_regression_batch_fn): the five raw
+    (streaming/events.py::REGRESSION_PARTIALS): the five raw
     moments (n, Σx, Σy, Σxy, Σx²) are exact integer sums (x = hour
     offset from a fixed 2024-01-01 anchor, y = cents), so per-batch
     partials merge by elementwise addition and the served
@@ -1045,31 +1045,17 @@ def streaming_incremental_regression(spark: SparkSession, sf_dir: str) -> DataFr
     oracle computes over all events. Fitting without re-shuffling
     history: persisted state is 5 longs per (group, live generation).
     A real AvailableNow run per invocation."""
-    import shutil
-    import tempfile
-
-    from pdf_brain_spark.streaming.events import (
-        read_regression,
-        streaming_incremental_regression as drive_reg,
-    )
+    from pdf_brain_spark.streaming.events import REGRESSION_PARTIALS, read_regression
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_reg_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "reg", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        drive_reg(spark, stream, store, ckpt).awaitTermination()
-        return read_regression(spark, store).orderBy("event_type").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return staged_stream(
+        spark,
+        [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
+        REGRESSION_PARTIALS.writer,
+        lambda store: read_regression(spark, store).orderBy("event_type"),
+    )
 
 
 @query(
@@ -1084,7 +1070,7 @@ def streaming_incremental_regression(spark: SparkSession, sf_dir: str) -> DataFr
 def streaming_incremental_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming EXACT incremental distinct counting — the bitmap
     complement of the KMV sketch (streaming/events.py::
-    make_bitmap_batch_fn): dense integer keys pack into 64-bit words
+    BITMAP_PARTIALS): dense integer keys pack into 64-bit words
     under bitwise OR (associative, commutative, idempotent), so however
     the stream or a compaction carved the data, Σ bit_count over the
     re-merged words IS the distinct count. The oracle is GROUND TRUTH
@@ -1093,31 +1079,17 @@ def streaming_incremental_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal. A real AvailableNow run per invocation; persisted state
     scales with occupied id-range/64 per group (roaring-style
     containers are the sparse-domain growth path)."""
-    import shutil
-    import tempfile
-
-    from pdf_brain_spark.streaming.events import (
-        read_bitmap_distinct,
-        streaming_incremental_bitmap as drive_bm,
-    )
+    from pdf_brain_spark.streaming.events import BITMAP_PARTIALS, read_bitmap_distinct
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "user_id"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_bm_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "bm", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        drive_bm(spark, stream, store, ckpt).awaitTermination()
-        return read_bitmap_distinct(spark, store).orderBy("event_type").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return staged_stream(
+        spark,
+        [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
+        BITMAP_PARTIALS.writer,
+        lambda store: read_bitmap_distinct(spark, store).orderBy("event_type"),
+    )
 
 
 @query(
@@ -2444,7 +2416,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_incremental_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Count-Min-Sketch heavy-hitter maintenance (Cormode &
     Muthukrishnan 2005) — the bounded-state frequency monoid
-    (streaming/events.py::make_cms_batch_fn): per-batch cell partials
+    (streaming/events.py::CMS_PARTIALS): per-batch cell partials
     merge by integer addition, so however the stream carved the corpus
     the merged sketch is bit-identical to the one-shot build the oracle
     replays. The gate probes the true top-10 terms and reports each
@@ -2454,27 +2426,12 @@ def streaming_incremental_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size — the regime where even the term dictionary outgrows
     memory and exact top-k stops being maintainable. A real
     AvailableNow run per invocation."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.functions.text import tokenize
-    from pdf_brain_spark.streaming.events import (
-        read_cms_estimates,
-        streaming_incremental_cms as drive_cms,
-    )
+    from pdf_brain_spark.streaming.events import CMS_PARTIALS, read_cms_estimates
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="sgraft_cms_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "cms", "ckpt"))
-    try:
-        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        drive_cms(spark, stream, store, ckpt).awaitTermination()
+
+    def serve(store: str) -> DataFrame:
         exact = (
             docs.select(F.explode(tokenize("text")).alias("term"))
             .groupBy("term")
@@ -2495,10 +2452,14 @@ def streaming_incremental_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("overestimate"),
             )
             .orderBy("term")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return staged_stream(
+        spark,
+        [docs.filter(F.col("doc_id") % 2 == 0), docs.filter(F.col("doc_id") % 2 == 1)],
+        CMS_PARTIALS.writer,
+        serve,
+    )
 
 
 @query(
@@ -3801,7 +3762,7 @@ def data_quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming corpus MinHash signatures — the partials store's first
-    MIN-monoid (streaming/events.py::make_minhash_batch_fn): per-batch
+    MIN-monoid (streaming/events.py::MINHASH_PARTIALS): per-batch
     per-(source, hash-index) minimum hashes merge by elementwise MIN
     (associative, commutative, AND idempotent — the lattice meet), so
     the streamed signature, and the pairwise source-Jaccard estimates
@@ -3810,34 +3771,20 @@ def streaming_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
     sketch-grade answer to source_contamination_matrix's exact overlap:
     16 longs per source instead of a shingle inverted index. A real
     AvailableNow run per invocation."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import (
+        MINHASH_PARTIALS,
         read_minhash_similarity,
-        streaming_incremental_minhash as drive_mh,
     )
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "source", "text")
-    root = tempfile.mkdtemp(prefix="sgraft_mh_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "mh", "ckpt"))
-    try:
-        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        drive_mh(spark, stream, store, ckpt).awaitTermination()
-        return (
-            read_minhash_similarity(spark, store)
-            .orderBy(F.col("jaccard_est_ppm").desc(), "src_a", "src_b")
-            .limit(50)
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return staged_stream(
+        spark,
+        [docs.filter(F.col("doc_id") % 2 == 0), docs.filter(F.col("doc_id") % 2 == 1)],
+        MINHASH_PARTIALS.writer,
+        lambda store: read_minhash_similarity(spark, store)
+        .orderBy(F.col("jaccard_est_ppm").desc(), "src_a", "src_b")
+        .limit(50),
+    )
 
 
 @query(

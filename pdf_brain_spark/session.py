@@ -27,7 +27,7 @@ def get_spark(app_name: str = "pdf_brain_spark", shuffle_partitions: int | None 
     # bounded (the ContextCleaner can only reclaim what the JVM can
     # collect). tests/test_dedup_scale.py asserts the drain.
     os.environ.setdefault("PYSPARK_PIN_THREAD", "false")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
     builder = (

@@ -57,26 +57,6 @@ def make_ann_ingest_batch_fn(index_dir: str, centroids: list[list[float]], vec_c
     return _each_batch
 
 
-def streaming_ann_ingest(
-    spark: SparkSession,
-    vec_stream: DataFrame,
-    index_dir: str,
-    centroids: list[list[float]],
-    checkpoint_dir: str,
-    vec_col: str = "embedding",
-):
-    """Drive the incremental ANN ingest as a Structured Streaming query
-    (AvailableNow in tests/gate; continuous in production)."""
-    return (
-        vec_stream.writeStream.foreachBatch(
-            make_ann_ingest_batch_fn(index_dir, centroids, vec_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def ivf_search_persisted(
     spark: SparkSession,
     index_dir: str,

@@ -1,5 +1,8 @@
-"""Generation protocol for the streaming-maintained persisted indexes
-(LSH band index, ANN IVF index, rollup partials).
+"""Generation protocol for the streaming-maintained persisted stores:
+the row stores (LSH band index, ANN IVF index, FTS postings) and the
+ten mergeable-partials stores (rollup, value histogram, term counts,
+OHLC, KMV, regression, bitmap, CMS, MinHash, novelty — one PartialsSpec
+each, in streaming/events.py).
 
 Every foreachBatch writer lands its micro-batch under `batch_id=N` (N >= 0,
 monotone from the stream checkpoint) — the replay-idempotence protocol
@@ -28,9 +31,8 @@ table format:
     positive dirs whether or not their deletes have completed.
 
 Negative ids can never collide with future stream batches (those are
-always >= 0), which closes the hole the previous rename-into-
-`batch_id=max` design had: nothing the stream will ever write shares a
-name with a compacted generation.
+always >= 0): nothing the stream will ever write shares a name with a
+compacted generation.
 
 Crash recovery is a cleanup, not a repair: if the compactor dies between
 rename and deletes, the stale positive dirs are invisible to readers
@@ -38,6 +40,9 @@ rename and deletes, the stale positive dirs are invisible to readers
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
@@ -198,8 +203,7 @@ def coverage(gen_id: int) -> int:
     """The highest stream batch a generation accounts for: a positive
     generation covers itself; a compacted generation -(m+1) covers
     0..m. The offset keeps coverage-0 representable (batch_id=-1)
-    instead of colliding with batch_id=0 (the former -m encoding wrote
-    a coverage-0 compaction onto the live batch-0 directory)."""
+    instead of colliding with the live batch_id=0 directory."""
     return -gen_id - 1 if gen_id < 0 else gen_id
 
 
@@ -243,10 +247,10 @@ def _coverage_col():
 
 def backfill_floors(spark: SparkSession, index_dir: str) -> list[int]:
     """All `backfill_floor=<int>` generation dirs under index_dir — the
-    REPLACEMENT-semantics namespace (see streaming/events.py::
-    backfill_rollup): a backfill generation carries corrected FULL
-    partials for its buckets and declares that, for those buckets, it
-    supersedes every additive generation covering <= its floor. A
+    REPLACEMENT-semantics namespace (see backfill_partials): a backfill
+    generation carries corrected FULL partials for its buckets and
+    declares that, for those buckets, it supersedes every additive
+    generation covering <= its floor. A
     compacted generation -m in turn supersedes backfill dirs with
     floor <= m (they were materialized into it, or were already dead) —
     the same precedence shape as the additive namespace, so the two
@@ -264,22 +268,85 @@ def backfill_floors(spark: SparkSession, index_dir: str) -> list[int]:
 
 
 # ---------------------------------------------------------------------------
-# Generic mergeable-partials store: the shared machinery behind the rollup
-# and histogram maintenance — per-batch additive partials (integer-mergeable
-# value columns at bucket grain), backfill generations with replacement
-# semantics, and a floor-aware compactor that materializes the reader's own
-# selection. Parameterized by (bucket_cols, value_cols); the domain modules
-# own the partial computation and the serve-time presentation.
+# Mergeable-partials stores: per-batch partials at bucket grain that merge
+# under a commutative monoid (the "mergeable summaries" of Agarwal et al.,
+# PODS 2012), backfill generations with replacement semantics, and a
+# floor-aware compactor that materializes the reader's own selection. A
+# store is one PartialsSpec (streaming/events.py holds them next to their
+# readers); everything below is the one copy of the glue they share.
 # ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class PartialsSpec:
+    """One mergeable-partials store.
+
+      * `bucket_cols`: the merge key; `value_cols`: the partial columns
+        merged per bucket. Both together are the persisted schema.
+      * `partial(batch_df, batch_id)`: the partials of one micro-batch (or
+        of a backfill's corrected slice, with the floor as batch_id).
+      * `merge`: a zero-argument callable returning the store's MERGE
+        MONOID — one aliased aggregate per value column, applied per
+        bucket. A callable, so that defining a spec needs no session.
+        None means integer SUM per value column. Any commutative,
+        associative aggregate whose result stays at the partial schema
+        works, because compaction must be a no-op under the reader's own
+        re-merge: merge(merge(a,b),c) = merge(a,b,c).
+      * `floor_cols`: the REPLACEMENT GRAIN of a backfill (see
+        kept_partial_rows); None means `bucket_cols`."""
+
+    bucket_cols: tuple[str, ...]
+    value_cols: tuple[str, ...]
+    partial: Callable
+    merge: Callable | None = None
+    floor_cols: tuple[str, ...] | None = None
+
+    def merge_exprs(self) -> list:
+        if self.merge is None:
+            from pyspark.sql import functions as F
+
+            return [F.sum(c).alias(c) for c in self.value_cols]
+        return self.merge()
+
+    def writer(self, store_dir: str):
+        """The foreachBatch body: each non-empty micro-batch writes its
+        OWN partials under `batch_id=N`, never touching other
+        generations, so a replay overwrites its own dir and the
+        at-least-once contract composes to effectively-once. Late data
+        is one more partial row; no read-modify-write ever happens."""
+
+        def _each_batch(batch_df, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            spark = batch_df.sparkSession
+            stamp_protocol(spark, store_dir)
+            self.partial(batch_df, batch_id).write.mode("overwrite").parquet(
+                f"{store_dir}/batch_id={batch_id}"
+            )
+            record_wseq(spark, store_dir, f"batch_id={batch_id}")
+
+        return _each_batch
+
+
+def drive_available_now(stream, each_batch, checkpoint_dir: str) -> None:
+    """Run `stream` through the foreachBatch body `each_batch` under
+    Trigger.AvailableNow (drain what the source holds now, then stop)
+    and wait for it. A continuous deployment runs the same body under a
+    processing-time trigger."""
+    (
+        stream.writeStream.foreachBatch(each_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def kept_partial_rows(
     spark: SparkSession,
+    spec: PartialsSpec,
     store_dir: str,
-    bucket_cols: list[str],
-    value_cols: list[str],
     upto: int | None = None,
-    floor_cols: list[str] | None = None,
     asof_wseq: int | None = None,
 ):
     """The partial rows the serve semantics keeps — ONE selection shared
@@ -295,15 +362,15 @@ def kept_partial_rows(
         floor (late additive data on top of the correction);
         non-backfilled groups keep all additive rows.
 
-    `floor_cols` is the REPLACEMENT GRAIN — the key at which a backfill
-    supersedes additive history. It defaults to `bucket_cols`, which is
-    right when corrections stay within their bucket (the rollup: a
-    re-measured hour is still that hour). When corrections MOVE rows
-    between buckets — a value-keyed histogram, where fixing a value
-    changes its cell — the floor grain must be the stable part of the
-    key (e.g. just event_type) and the backfill must carry that group's
-    COMPLETE corrected partials, else stale cells the correction
-    vacated would survive.
+    The spec's `floor_cols` is the REPLACEMENT GRAIN — the key at which
+    a backfill supersedes additive history. Bucket grain is right when
+    corrections stay within their bucket (the rollup: a re-measured hour
+    is still that hour). When corrections MOVE rows between buckets — a
+    value-keyed histogram, where fixing a value changes its cell — the
+    floor grain must be the stable part of the key (e.g. just
+    event_type) and the backfill must carry that group's COMPLETE
+    corrected partials, else stale cells the correction vacated would
+    survive.
 
     `asof_wseq` is WRITE-TIME travel (mutually exclusive with `upto`):
     restrict the raw dir listing to dirs recorded at write-sequence
@@ -316,7 +383,7 @@ def kept_partial_rows(
     compactor's surviving sources count as retired too)."""
     from pyspark.sql import functions as F
 
-    floor_cols = list(floor_cols) if floor_cols is not None else list(bucket_cols)
+    floor_cols = list(spec.floor_cols or spec.bucket_cols)
     if asof_wseq is not None:
         if upto is not None:
             raise ValueError("pass either upto (coverage) or asof_wseq (write-time), not both")
@@ -362,7 +429,7 @@ def kept_partial_rows(
             )
         ids = [g for g in ids if coverage(g) <= upto]
         floors = [k for k in floors if k <= upto]
-    cols = list(bucket_cols) + list(value_cols)
+    cols = [*spec.bucket_cols, *spec.value_cols]
     adds = None
     if ids:
         adds = spark.read.option("basePath", store_dir).parquet(
@@ -391,16 +458,50 @@ def kept_partial_rows(
     return adds_kept.unionByName(backs_kept)
 
 
+def merged_partials(
+    spark: SparkSession,
+    spec: PartialsSpec,
+    store_dir: str,
+    upto: int | None = None,
+    asof_wseq: int | None = None,
+):
+    """The kept partials merged to one row per bucket with the spec's
+    monoid, at the partial schema — what every reader serves from and
+    what the compactor writes."""
+    return (
+        kept_partial_rows(spark, spec, store_dir, upto=upto, asof_wseq=asof_wseq)
+        .groupBy(*spec.bucket_cols)
+        .agg(*spec.merge_exprs())
+    )
+
+
 def backfill_partials(
     spark: SparkSession,
+    spec: PartialsSpec,
     store_dir: str,
-    partial_df,
-    floor: int,
+    corrected_events,
+    floor_batch_id: int,
     overwrite: bool = False,
+    buckets=None,
 ) -> None:
-    """Write a backfill generation (replacement semantics — see
-    backfill_floors): `partial_df` must hold the CORRECTED full partials
-    for the floor groups it covers, at the store's partial schema.
+    """REPLACEMENT semantics on the append-only store — the repair the
+    additive partials model cannot express: when a slice of history
+    turns out to be WRONG (bad sensor, bug-era double counting), late
+    additive partials can only add, never retract. A backfill generation
+    `backfill_floor=K` carries the partials recomputed from the
+    CORRECTED facts of its floor groups (see kept_partial_rows for the
+    grain) and declares that, for those groups, every additive
+    generation covering <= K is superseded; additive batches newer than
+    the floor still merge on top, so the stream never pauses. Where the
+    floor grain is coarser than the bucket (the histogram),
+    `corrected_events` must be each affected group's COMPLETE corrected
+    history up to the floor.
+
+    Replacement is row-presence-based, so a bucket the correction leaves
+    EMPTY needs an explicit marker: pass `buckets`, a frame of all the
+    buckets this repair covers, and absent buckets get a zero partial
+    that supersedes their stale additive history. Zero is the identity
+    of the SUM merge only, so a store with its own monoid rejects it.
 
     A floor can be used ONCE: unlike tombstones (pure key sets that
     union), two backfills at one floor cannot compose — the second's
@@ -413,59 +514,71 @@ def backfill_partials(
     corrections into one backfill frame or wait for the frontier to
     advance to a fresh floor. Floor contract: above the newest compacted
     coverage, and covering only committed batches."""
+    from pyspark.sql import functions as F
+
     m_star = max(
         [coverage(g) for g in generation_ids(spark, store_dir) if g < 0],
         default=-1,
     )
-    if floor <= m_star:
+    if floor_batch_id <= m_star:
         raise ValueError(
-            f"backfill floor {floor} is at or below the newest compacted "
-            f"coverage {m_star}: it would be superseded on arrival. "
-            "Backfill above the compaction frontier (or recompute from facts)."
+            f"backfill floor {floor_batch_id} is at or below the newest "
+            f"compacted coverage {m_star}: it would be superseded on "
+            "arrival. Backfill above the compaction frontier (or recompute "
+            "from facts)."
         )
-    if not overwrite and floor in backfill_floors(spark, store_dir):
+    if not overwrite and floor_batch_id in backfill_floors(spark, store_dir):
         raise ValueError(
-            f"backfill floor {floor} is already occupied: overwriting would "
+            f"backfill floor {floor_batch_id} is already occupied: overwriting would "
             "revert the earlier correction's buckets. Merge the corrections "
             "into one backfill, use a fresher committed floor, or pass "
             "overwrite=True to retry the same logical backfill."
         )
+    partial = spec.partial(corrected_events, floor_batch_id)
+    if buckets is not None:
+        if spec.merge is not None:
+            raise ValueError(
+                "buckets= fills absent buckets with a zero partial, the "
+                "identity of the SUM merge; this store merges with its own "
+                "monoid and has no zero partial"
+            )
+        keys = list(spec.bucket_cols)
+        partial = (
+            buckets.select(*keys)
+            .distinct()
+            .join(partial, keys, "left")
+            .select(
+                *keys,
+                *[
+                    F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
+                    for c in spec.value_cols
+                ],
+            )
+        )
     stamp_protocol(spark, store_dir)
-    partial_df.write.mode("overwrite").parquet(
-        f"{store_dir}/backfill_floor={floor}"
+    partial.write.mode("overwrite").parquet(
+        f"{store_dir}/backfill_floor={floor_batch_id}"
     )
-    record_wseq(spark, store_dir, f"backfill_floor={floor}")
+    record_wseq(spark, store_dir, f"backfill_floor={floor_batch_id}")
 
 
 def compact_partials(
     spark: SparkSession,
+    spec: PartialsSpec,
     store_dir: str,
     upto_batch_id: int,
-    bucket_cols: list[str],
-    value_cols: list[str],
-    floor_cols: list[str] | None = None,
-    merge_exprs: list | None = None,
 ) -> int:
     """Floor-aware partials compaction: merge every live additive
     generation covering ≤ upto_batch_id AND every applicable backfill
     generation (floor in (m*, upto]) into one compacted generation
     holding the bucket-grain RESOLVED partials, computed by the same
-    `kept_partial_rows` the readers use. The compacted id is
-    compacted_id(max(coverages, floors)), so it supersedes both the
-    consumed additive dirs AND the consumed backfill dirs; deletes
-    happen after the atomic rename, and dead dirs from either namespace
-    are swept. Returns the number of generations merged.
-
-    `merge_exprs` is the store's MERGE MONOID — a list of aliased
-    aggregate expressions (one per value column) applied per bucket.
-    Default: integer SUM per value column (the rollup/histogram/term
-    stores). Any commutative, associative aggregate whose result stays
-    at the partial schema works — the OHLC store merges with min/max
-    over ordering structs — because compaction must be a no-op under
-    the reader's own re-aggregation: merge(merge(a,b),c) =
-    merge(a,b,c)."""
-    from pyspark.sql import functions as F
-
+    `merged_partials` the readers use — corrected buckets keep backfill
+    + post-floor additive rows only, merged with the spec's monoid. The
+    compacted id is compacted_id(max(coverages, floors)), so it
+    supersedes both the consumed additive dirs AND the consumed backfill
+    dirs; deletes happen after the atomic rename, and dead dirs from
+    either namespace are swept. Only compact batches the stream's
+    checkpoint has committed. Returns the number of generations merged."""
     HPath, fs = _fs(spark, store_dir)
     all_ids = generation_ids(spark, store_dir)
     live = live_generation_ids(all_ids)
@@ -486,16 +599,7 @@ def compact_partials(
         return 0  # lone compacted gen: nothing new arrived at this coverage
     m = max([coverage(g) for g in src_add] + src_fl)
     dest = compacted_id(m)
-    if merge_exprs is None:
-        merge_exprs = [F.sum(c).alias(c) for c in value_cols]
-    merged = (
-        kept_partial_rows(
-            spark, store_dir, bucket_cols, value_cols,
-            upto=upto_batch_id, floor_cols=floor_cols,
-        )
-        .groupBy(*bucket_cols)
-        .agg(*merge_exprs)
-    )
+    merged = merged_partials(spark, spec, store_dir, upto=upto_batch_id)
     tmp = f"{store_dir}/.compact_tmp_{m}"
     fs.delete(HPath(tmp), True)
     merged.coalesce(1).write.mode("overwrite").parquet(tmp)

@@ -34,12 +34,12 @@ def _model_rollup(model_rows):
 
 def test_partials_store_fuzz_against_model(spark, tmp_path):
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        compact_rollup,
-        make_rollup_batch_fn,
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS
+    from pdf_brain_spark.streaming.generations import (
+        backfill_floors,
+        backfill_partials,
+        compact_partials,
     )
-    from pdf_brain_spark.streaming.generations import backfill_floors
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
@@ -68,7 +68,7 @@ def test_partials_store_fuzz_against_model(spark, tmp_path):
     for seed in (101, 202):
         rng = random.Random(seed)
         roll = str(tmp_path / f"roll_{seed}")
-        fn = make_rollup_batch_fn(roll)
+        fn = ROLLUP_PARTIALS.writer(roll)
         # model state: bucket -> list of cent values currently counted
         model = {}
         committed = -1
@@ -108,7 +108,13 @@ def test_partials_store_fuzz_against_model(spark, tmp_path):
                 if committed <= m_star:
                     continue
                 i = rng.choice(ingested)
-                backfill_rollup(spark, roll, slice_df(i, factor=2), floor_batch_id=committed)
+                backfill_partials(
+                    spark,
+                    ROLLUP_PARTIALS,
+                    roll,
+                    slice_df(i, factor=2),
+                    floor_batch_id=committed,
+                )
                 corrected_floors[committed] = i
                 # model: corrected buckets REPLACE history <= floor for
                 # those buckets. Since every batch so far is <= floor,
@@ -119,7 +125,7 @@ def test_partials_store_fuzz_against_model(spark, tmp_path):
                     model[k] = list(vals)
             elif op == "compact" and committed >= 0:
                 upto = rng.randint(0, committed)
-                compact_rollup(spark, roll, upto_batch_id=upto)
+                compact_partials(spark, ROLLUP_PARTIALS, roll, upto_batch_id=upto)
                 # model unchanged: compaction must never change serving
             if committed >= 0:
                 assert _served_rollup(spark, roll) == _model_rollup(model), (

@@ -240,7 +240,8 @@ def test_streaming_incremental_dedup_accumulates_full_pairset(spark, tmp_path):
     import random
 
     from pdf_brain_spark.operators.dedup import minhash_lsh_pairs
-    from pdf_brain_spark.streaming.events import streaming_incremental_dedup
+    from pdf_brain_spark.streaming.events import make_incremental_dedup_batch_fn
+    from pdf_brain_spark.streaming.generations import drive_available_now
 
     rng = random.Random(77)
     vocab = [f"tok{i}" for i in range(3000)]
@@ -266,8 +267,9 @@ def test_streaming_incremental_dedup_accumulates_full_pairset(spark, tmp_path):
     idx = str(tmp_path / "band_index")
     cands = str(tmp_path / "candidates")
     ckpt = str(tmp_path / "ckpt")
-    q = streaming_incremental_dedup(spark, stream, idx, cands, ckpt)
-    q.awaitTermination()
+    drive_available_now(
+        stream, make_incremental_dedup_batch_fn(spark, idx, cands), ckpt
+    )
 
     got = {
         (r["doc_a"], r["doc_b"])
@@ -514,13 +516,13 @@ def test_incremental_rollup_replay_idempotent_and_late_data(spark, tmp_path):
     is bucket-grain (each generation holds at most |buckets| rows, not
     |events|)."""
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import make_rollup_batch_fn, read_rollup
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS, read_rollup
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     roll = str(tmp_path / "rollup")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP_PARTIALS.writer(roll)
     b0 = ev.filter(F.col("event_id") % 2 == 0)
     b1 = ev.filter(F.col("event_id") % 2 == 1)  # same hours: all late data
     fn(b0, 0)
@@ -574,12 +576,9 @@ def test_generation_protocol_mid_compaction_reader_safety(spark, tmp_path):
     import shutil
 
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        compact_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS, read_rollup
     from pdf_brain_spark.streaming.generations import (
+        compact_partials,
         generation_ids,
         live_generation_ids,
     )
@@ -595,7 +594,7 @@ def test_generation_protocol_mid_compaction_reader_safety(spark, tmp_path):
         "event_id", "event_type", "ts", "value"
     )
     roll = str(tmp_path / "rollup")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP_PARTIALS.writer(roll)
     for b in range(3):
         fn(ev.filter(F.col("event_id") % 3 == b), b)
 
@@ -612,7 +611,7 @@ def test_generation_protocol_mid_compaction_reader_safety(spark, tmp_path):
     # rename and the deletes (or after a compactor crash there)
     for b in (0, 1):
         shutil.copytree(f"{roll}/batch_id={b}", str(tmp_path / f"bak{b}"))
-    assert compact_rollup(spark, roll, upto_batch_id=1) == 2
+    assert compact_partials(spark, ROLLUP_PARTIALS, roll, upto_batch_id=1) == 2
     assert generation_ids(spark, roll) == [-2, 2]
     for b in (0, 1):
         shutil.copytree(str(tmp_path / f"bak{b}"), f"{roll}/batch_id={b}")
@@ -620,12 +619,12 @@ def test_generation_protocol_mid_compaction_reader_safety(spark, tmp_path):
     assert served() == before  # precedence hides them: no double counting
 
     # the next sweep garbage-collects the stale dirs without re-merging
-    assert compact_rollup(spark, roll, upto_batch_id=1) == 0
+    assert compact_partials(spark, ROLLUP_PARTIALS, roll, upto_batch_id=1) == 0
     assert generation_ids(spark, roll) == [-2, 2]
     assert served() == before
 
     # chained compaction over a compacted generation: -2 + 2 -> -3
-    assert compact_rollup(spark, roll, upto_batch_id=2) == 2
+    assert compact_partials(spark, ROLLUP_PARTIALS, roll, upto_batch_id=2) == 2
     assert generation_ids(spark, roll) == [-3]
     assert served() == before
     # compacted partials are bucket-grain: one row per (type, hour)
@@ -704,16 +703,16 @@ def test_incremental_percentiles_replay_merge_compact(spark, tmp_path):
     preserves the served quantiles and shrinks state to bucket grain."""
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.events import (
-        compact_value_histogram,
-        make_value_histogram_batch_fn,
+        HISTOGRAM_PARTIALS,
         read_histogram_percentiles,
     )
+    from pdf_brain_spark.streaming.generations import compact_partials
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "value"
     )
     hist = str(tmp_path / "hist")
-    fn = make_value_histogram_batch_fn(hist)
+    fn = HISTOGRAM_PARTIALS.writer(hist)
     for b in range(3):
         fn(ev.filter(F.col("event_id") % 3 == b), b)
 
@@ -749,7 +748,7 @@ def test_incremental_percentiles_replay_merge_compact(spark, tmp_path):
             want.append((t, q / 100.0, round(bs[rank - 1] / 100.0, 2)))
     assert got == sorted(want)
 
-    assert compact_value_histogram(spark, hist, upto_batch_id=2) == 3
+    assert compact_partials(spark, HISTOGRAM_PARTIALS, hist, upto_batch_id=2) == 3
     assert served() == got
     n_buckets = len({(t, b) for t, bs in by_type.items() for b in bs})
     assert spark.read.parquet(f"{hist}/batch_id=-3").count() == n_buckets
@@ -757,7 +756,7 @@ def test_incremental_percentiles_replay_merge_compact(spark, tmp_path):
 
 def test_rollup_backfill_replacement_semantics(spark, tmp_path):
     """Backfill = REPLACEMENT on the append-only rollup store
-    (streaming/events.py::backfill_rollup): corrected partials for a
+    (streaming/generations.py::backfill_partials): corrected partials for a
     bucket supersede every additive generation at or below the floor,
     later additive batches still apply on top, compaction materializes
     the resolution (via the same kept-rows selection the reader uses)
@@ -768,19 +767,19 @@ def test_rollup_backfill_replacement_semantics(spark, tmp_path):
     import pytest as _pytest
 
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        compact_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS, read_rollup
+    from pdf_brain_spark.streaming.generations import (
+        backfill_floors,
+        backfill_partials,
+        compact_partials,
+        generation_ids,
     )
-    from pdf_brain_spark.streaming.generations import backfill_floors, generation_ids
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     roll = str(tmp_path / "rollup")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP_PARTIALS.writer(roll)
     for b in range(3):
         fn(ev.filter(F.col("event_id") % 3 == b), b)
 
@@ -796,7 +795,7 @@ def test_rollup_backfill_replacement_semantics(spark, tmp_path):
     h0 = ev.agg(F.date_trunc("hour", F.min("ts")).alias("h")).first()["h"]
     in_h = F.date_trunc("hour", F.col("ts")) == F.lit(h0)
     corrected = ev.filter(in_h).withColumn("value", F.round(F.col("value") * 2, 2))
-    backfill_rollup(spark, roll, corrected, floor_batch_id=2)
+    backfill_partials(spark, ROLLUP_PARTIALS, roll, corrected, floor_batch_id=2)
 
     want = dict(base)
     for r in (
@@ -816,10 +815,14 @@ def test_rollup_backfill_replacement_semantics(spark, tmp_path):
     # a floor can be used once: a DIFFERENT repair at the same floor
     # must refuse (overwriting would revert the first correction) …
     with _pytest.raises(ValueError):
-        backfill_rollup(spark, roll, corrected.limit(1), floor_batch_id=2)
+        backfill_partials(
+            spark, ROLLUP_PARTIALS, roll, corrected.limit(1), floor_batch_id=2
+        )
     # … while an explicit overwrite=True retries the SAME logical repair
     # idempotently
-    backfill_rollup(spark, roll, corrected, floor_batch_id=2, overwrite=True)
+    backfill_partials(
+        spark, ROLLUP_PARTIALS, roll, corrected, floor_batch_id=2, overwrite=True
+    )
     assert served() == want
 
     # late additive data lands ON TOP of the correction
@@ -837,7 +840,8 @@ def test_rollup_backfill_replacement_semantics(spark, tmp_path):
 
     # compaction resolves floors with the reader's own selection
     shutil.copytree(f"{roll}/backfill_floor=2", str(tmp_path / "bak_fl"))
-    assert compact_rollup(spark, roll, upto_batch_id=3) == 5  # gens 0-3 + 1 backfill
+    # gens 0-3 + 1 backfill
+    assert compact_partials(spark, ROLLUP_PARTIALS, roll, upto_batch_id=3) == 5
     assert generation_ids(spark, roll) == [-4]
     assert backfill_floors(spark, roll) == []
     assert served() == got2
@@ -846,12 +850,12 @@ def test_rollup_backfill_replacement_semantics(spark, tmp_path):
     # is invisible to readers and swept by the next compaction pass
     shutil.copytree(str(tmp_path / "bak_fl"), f"{roll}/backfill_floor=2")
     assert served() == got2
-    assert compact_rollup(spark, roll, upto_batch_id=3) == 0
+    assert compact_partials(spark, ROLLUP_PARTIALS, roll, upto_batch_id=3) == 0
     assert backfill_floors(spark, roll) == []
 
     # floor at or below the compaction frontier is refused
     with _pytest.raises(ValueError):
-        backfill_rollup(spark, roll, corrected, floor_batch_id=3)
+        backfill_partials(spark, ROLLUP_PARTIALS, roll, corrected, floor_batch_id=3)
 
 
 def test_histogram_backfill_type_grain_replacement(spark, tmp_path):
@@ -863,18 +867,21 @@ def test_histogram_backfill_type_grain_replacement(spark, tmp_path):
     retires."""
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.events import (
-        backfill_value_histogram,
-        compact_value_histogram,
-        make_value_histogram_batch_fn,
+        HISTOGRAM_PARTIALS,
         read_histogram_percentiles,
     )
-    from pdf_brain_spark.streaming.generations import backfill_floors, generation_ids
+    from pdf_brain_spark.streaming.generations import (
+        backfill_floors,
+        backfill_partials,
+        compact_partials,
+        generation_ids,
+    )
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "value"
     )
     hist = str(tmp_path / "hist")
-    fn = make_value_histogram_batch_fn(hist)
+    fn = HISTOGRAM_PARTIALS.writer(hist)
     for b in range(2):
         fn(ev.filter(F.col("event_id") % 2 == b), b)
 
@@ -889,7 +896,7 @@ def test_histogram_backfill_type_grain_replacement(spark, tmp_path):
     corrected = ev.filter(F.col("event_type") == "click").withColumn(
         "value", F.round(F.col("value") * 2, 2)
     )
-    backfill_value_histogram(spark, hist, corrected, floor_batch_id=1)
+    backfill_partials(spark, HISTOGRAM_PARTIALS, hist, corrected, floor_batch_id=1)
     got = served()
     # the corrected type serves the doubled distribution: p-values double
     base_click = {q: v for t, q, v in base if t == "click"}
@@ -900,7 +907,7 @@ def test_histogram_backfill_type_grain_replacement(spark, tmp_path):
     assert [x for x in got if x[0] != "click"] == [x for x in base if x[0] != "click"]
 
     # compaction materializes the per-type resolution, retires the dir
-    n = compact_value_histogram(spark, hist, upto_batch_id=1)
+    n = compact_partials(spark, HISTOGRAM_PARTIALS, hist, upto_batch_id=1)
     assert n == 3  # 2 additive gens + 1 backfill
     assert generation_ids(spark, hist) == [-2]
     assert backfill_floors(spark, hist) == []
@@ -1006,17 +1013,14 @@ def test_rollup_backfill_empty_bucket_marker(spark, tmp_path):
     the vacated hour serves (0, 0.0); without it, replacement is
     row-presence-based and the stale totals would survive."""
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS, read_rollup
+    from pdf_brain_spark.streaming.generations import backfill_partials
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     roll = str(tmp_path / "rollup")
-    make_rollup_batch_fn(roll)(ev, 0)
+    ROLLUP_PARTIALS.writer(roll)(ev, 0)
 
     h0 = ev.agg(F.date_trunc("hour", F.min("ts")).alias("h")).first()["h"]
     in_h = F.date_trunc("hour", F.col("ts")) == F.lit(h0)
@@ -1024,8 +1028,13 @@ def test_rollup_backfill_empty_bucket_marker(spark, tmp_path):
     spine = ev.filter(in_h).select(
         "event_type", F.date_trunc("hour", "ts").alias("window_start")
     )
-    backfill_rollup(
-        spark, roll, ev.filter(in_h).limit(0), floor_batch_id=0, buckets=spine
+    backfill_partials(
+        spark,
+        ROLLUP_PARTIALS,
+        roll,
+        ev.filter(in_h).limit(0),
+        floor_batch_id=0,
+        buckets=spine,
     )
     got = {
         (r["event_type"], str(r["window_start"])): (r["n_events"], r["total_value"])
@@ -1121,29 +1130,28 @@ def test_coverage_zero_compaction_and_refit(spark, tmp_path):
     assert kept_index_rows(spark, idx2, ["vec_id"]).count() == emb.count()
 
     # (3) partials store: batch 0 + a floor-0 backfill compact to -1
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        compact_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS, read_rollup
+    from pdf_brain_spark.streaming.generations import (
+        backfill_floors,
+        backfill_partials,
+        compact_partials,
     )
-    from pdf_brain_spark.streaming.generations import backfill_floors
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     roll = str(tmp_path / "rollup")
-    make_rollup_batch_fn(roll)(ev, 0)
+    ROLLUP_PARTIALS.writer(roll)(ev, 0)
     h0 = ev.agg(F.date_trunc("hour", F.min("ts")).alias("h")).first()["h"]
     corrected = ev.filter(F.date_trunc("hour", F.col("ts")) == F.lit(h0)).withColumn(
         "value", F.round(F.col("value") * 2, 2)
     )
-    backfill_rollup(spark, roll, corrected, floor_batch_id=0)
+    backfill_partials(spark, ROLLUP_PARTIALS, roll, corrected, floor_batch_id=0)
     want = sorted(
         (r["event_type"], str(r["window_start"]), r["n_events"], r["total_value"])
         for r in read_rollup(spark, roll).collect()
     )
-    assert compact_rollup(spark, roll, upto_batch_id=0) == 2
+    assert compact_partials(spark, ROLLUP_PARTIALS, roll, upto_batch_id=0) == 2
     assert generation_ids(spark, roll) == [-1]
     assert backfill_floors(spark, roll) == []
     got = sorted(
@@ -1269,19 +1277,15 @@ def test_streaming_ohlc_replay_merge_compact(spark, tmp_path):
     (merge associativity exercised through a real consolidation)."""
     from pdf_brain_spark.operators.temporal import ohlc_bars
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        compact_ohlc,
-        make_ohlc_batch_fn,
-        read_ohlc,
-    )
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.events import OHLC_PARTIALS, read_ohlc
+    from pdf_brain_spark.streaming.generations import compact_partials, generation_ids
     from pdf_brain_spark.sources.loaders import load_table
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     store = str(tmp_path / "ohlc")
-    fn = make_ohlc_batch_fn(store)
+    fn = OHLC_PARTIALS.writer(store)
     for b in range(3):
         fn(ev.filter(F.col("event_id") % 3 == b), b)
 
@@ -1308,7 +1312,7 @@ def test_streaming_ohlc_replay_merge_compact(spark, tmp_path):
     assert served() == want
 
     # compaction with the min/max monoid: bar-grain state, serving fixed
-    assert compact_ohlc(spark, store, upto_batch_id=2) == 3
+    assert compact_partials(spark, OHLC_PARTIALS, store, upto_batch_id=2) == 3
     assert generation_ids(spark, store) == [-3]
     assert served() == want
     n_bars = len(want)
@@ -1320,17 +1324,14 @@ def test_rollup_time_travel_snapshots(spark, tmp_path):
     compaction retires the snapshots it merges (documented retention
     trade) while the latest state keeps serving."""
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        compact_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS, read_rollup
+    from pdf_brain_spark.streaming.generations import compact_partials
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     roll = str(tmp_path / "rollup")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP_PARTIALS.writer(roll)
     for b in range(3):
         fn(ev.filter(F.col("event_id") % 3 == b), b)
 
@@ -1362,7 +1363,7 @@ def test_rollup_time_travel_snapshots(spark, tmp_path):
 
     # compaction up to batch 1 retires snapshots 0 and 1; snapshot 1
     # remains reachable AT the compacted coverage, snapshot 0 is gone
-    assert compact_rollup(spark, roll, upto_batch_id=1) == 2
+    assert compact_partials(spark, ROLLUP_PARTIALS, roll, upto_batch_id=1) == 2
     assert served(asof=1) == oneshot(F.col("event_id") % 3 <= 1)
     assert served() == oneshot(F.lit(True))
 
@@ -1373,26 +1374,26 @@ def test_ohlc_backfill_replacement_monoid(spark, tmp_path):
     materializes the resolution."""
     from pdf_brain_spark.operators.temporal import ohlc_bars
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        backfill_ohlc,
-        compact_ohlc,
-        make_ohlc_batch_fn,
-        read_ohlc,
+    from pdf_brain_spark.streaming.events import OHLC_PARTIALS, read_ohlc
+    from pdf_brain_spark.streaming.generations import (
+        backfill_floors,
+        backfill_partials,
+        compact_partials,
+        generation_ids,
     )
-    from pdf_brain_spark.streaming.generations import backfill_floors, generation_ids
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     store = str(tmp_path / "ohlc")
-    fn = make_ohlc_batch_fn(store)
+    fn = OHLC_PARTIALS.writer(store)
     fn(ev.filter(F.col("event_id") % 2 == 0), 0)
     fn(ev.filter(F.col("event_id") % 2 == 1), 1)
 
     h0 = ev.agg(F.date_trunc("hour", F.min("ts")).alias("h")).first()["h"]
     in_h = F.date_trunc("hour", F.col("ts")) == F.lit(h0)
     corrected = ev.filter(in_h).withColumn("value", F.round(F.col("value") * 3, 2))
-    backfill_ohlc(spark, store, corrected, floor_batch_id=1)
+    backfill_partials(spark, OHLC_PARTIALS, store, corrected, floor_batch_id=1)
 
     def served():
         return {
@@ -1421,7 +1422,7 @@ def test_ohlc_backfill_replacement_monoid(spark, tmp_path):
     assert changed and any(got[k][1] != base[k] for k in changed)
 
     # monoid compaction materializes and retires the backfill dir
-    assert compact_ohlc(spark, store, upto_batch_id=1) == 3
+    assert compact_partials(spark, OHLC_PARTIALS, store, upto_batch_id=1) == 3
     assert generation_ids(spark, store) == [-2]
     assert backfill_floors(spark, store) == []
     assert served() == want
@@ -1538,7 +1539,7 @@ def test_generation_protocol_marker(spark, tmp_path):
 
     import pytest as _pytest
 
-    from pdf_brain_spark.streaming.events import make_rollup_batch_fn
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS
     from pdf_brain_spark.streaming.generations import (
         PROTOCOL_MARKER,
         generation_ids,
@@ -1549,7 +1550,7 @@ def test_generation_protocol_marker(spark, tmp_path):
         [(1, "a", 1.0)], "event_id long, event_type string, value double"
     ).withColumn("ts", F.current_timestamp())
     roll = str(tmp_path / "roll")
-    make_rollup_batch_fn(roll)(ev, 0)
+    ROLLUP_PARTIALS.writer(roll)(ev, 0)
     assert os.path.exists(os.path.join(roll, PROTOCOL_MARKER))
     assert generation_ids(spark, roll) == [0]
 
@@ -1575,21 +1576,18 @@ def test_time_travel_below_compacted_coverage_specific_error(spark, tmp_path):
     'no live generations' fallthrough."""
     import pytest as _pytest
 
-    from pdf_brain_spark.streaming.events import (
-        compact_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS, read_rollup
+    from pdf_brain_spark.streaming.generations import compact_partials
 
     ev = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0)],
         "event_id long, event_type string, value double",
     ).withColumn("ts", F.current_timestamp())
     roll = str(tmp_path / "roll")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP_PARTIALS.writer(roll)
     fn(ev.filter(F.col("event_id") == 1), 0)
     fn(ev.filter(F.col("event_id") == 2), 1)
-    assert compact_rollup(spark, roll, upto_batch_id=1) == 2
+    assert compact_partials(spark, ROLLUP_PARTIALS, roll, upto_batch_id=1) == 2
     # travel to coverage 1 still works (the compacted generation)
     assert read_rollup(spark, roll, asof_batch_id=1).count() > 0
     with _pytest.raises(ValueError, match="retired by a compaction"):
@@ -1604,11 +1602,10 @@ def test_rollup_bitemporal_write_vs_coverage(spark, tmp_path):
     Compaction retires both kinds of snapshot with specific errors."""
     import pytest as _pytest
 
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        compact_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
+    from pdf_brain_spark.streaming.events import ROLLUP_PARTIALS, read_rollup
+    from pdf_brain_spark.streaming.generations import (
+        backfill_partials,
+        compact_partials,
     )
 
     def mk(rows):
@@ -1621,7 +1618,7 @@ def test_rollup_bitemporal_write_vs_coverage(spark, tmp_path):
     h0 = dt.datetime(2024, 1, 1, 10, 0, 0)
     h1 = dt.datetime(2024, 1, 1, 11, 0, 0)
     roll = str(tmp_path / "roll")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP_PARTIALS.writer(roll)
     fn(mk([(1, "a", h0, 10.0), (2, "a", h0, 20.0)]), 0)
     fn(mk([(3, "a", h1, 5.0)]), 1)
 
@@ -1636,7 +1633,9 @@ def test_rollup_bitemporal_write_vs_coverage(spark, tmp_path):
     assert ("a", str(h0), 2, 30.0) in seen_at_1
 
     # repair: hour h0 was double-counted — corrected slice has one event
-    backfill_rollup(spark, roll, mk([(1, "a", h0, 10.0)]), floor_batch_id=1)
+    backfill_partials(
+        spark, ROLLUP_PARTIALS, roll, mk([(1, "a", h0, 10.0)]), floor_batch_id=1
+    )
 
     corrected = snap(asof_batch_id=1)  # coverage mode sees the repair
     assert ("a", str(h0), 1, 10.0) in corrected and corrected != seen_at_1
@@ -1651,7 +1650,7 @@ def test_rollup_bitemporal_write_vs_coverage(spark, tmp_path):
     assert at_2_write == snap(asof_batch_id=2)  # nothing newer than batch 2
 
     # compaction retires old snapshots in BOTH temporalities
-    assert compact_rollup(spark, roll, upto_batch_id=2) == 4
+    assert compact_partials(spark, ROLLUP_PARTIALS, roll, upto_batch_id=2) == 4
     assert snap() == at_2_write  # current serve unchanged
     with _pytest.raises(ValueError, match="retired by a compaction"):
         read_rollup(spark, roll, asof_batch_id=1).collect()
@@ -1666,20 +1665,15 @@ def test_streaming_kmv_replay_merge_compact(spark, tmp_path):
     associativity exercised through real splits), and compaction with
     the set-union monoid preserves serving exactly."""
     from pdf_brain_spark.functions.text import md5_long
-    from pdf_brain_spark.streaming.events import (
-        KMV_K,
-        compact_kmv,
-        make_kmv_batch_fn,
-        read_kmv,
-    )
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.events import KMV_K, KMV_PARTIALS, read_kmv
+    from pdf_brain_spark.streaming.generations import compact_partials, generation_ids
     from pdf_brain_spark.sources.loaders import load_table
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "user_id"
     )
     store = str(tmp_path / "kmv")
-    fn = make_kmv_batch_fn(store)
+    fn = KMV_PARTIALS.writer(store)
     fn(ev.filter(F.col("event_id") % 3 == 0), 0)
     fn(ev.filter(F.col("event_id") % 3 == 1), 1)
     fn(ev.filter(F.col("event_id") % 3 == 2), 2)
@@ -1719,7 +1713,7 @@ def test_streaming_kmv_replay_merge_compact(spark, tmp_path):
     assert got == want and got
 
     # compaction with the set-union monoid preserves serving
-    assert compact_kmv(spark, store, upto_batch_id=2) == 3
+    assert compact_partials(spark, KMV_PARTIALS, store, upto_batch_id=2) == 3
     assert generation_ids(spark, store) == [-3]
     assert served() == want
 
@@ -1732,21 +1726,20 @@ def test_streaming_regression_replay_merge_compact(spark, tmp_path):
     exercises it through real three-way splits), and compaction with
     the additive monoid preserves serving exactly."""
     from pdf_brain_spark.streaming.events import (
+        REGRESSION_PARTIALS,
         _REG_SUMS,
         _reg_partial,
-        compact_regression,
-        make_regression_batch_fn,
         read_regression,
         regression_fit_exprs,
     )
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.generations import compact_partials, generation_ids
     from pdf_brain_spark.sources.loaders import load_table
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     store = str(tmp_path / "reg")
-    fn = make_regression_batch_fn(store)
+    fn = REGRESSION_PARTIALS.writer(store)
     fn(ev.filter(F.col("event_id") % 3 == 0), 0)
     fn(ev.filter(F.col("event_id") % 3 == 1), 1)
     fn(ev.filter(F.col("event_id") % 3 == 2), 2)
@@ -1767,14 +1760,14 @@ def test_streaming_regression_replay_merge_compact(spark, tmp_path):
         )
 
     slope, intercept = regression_fit_exprs()
-    one_shot = _reg_partial(ev, "event_type", "ts", "value").select(
-        "event_type", *_REG_SUMS, slope, intercept
-    )
+    one_shot = _reg_partial(ev, 0).select("event_type", *_REG_SUMS, slope, intercept)
     want = sorted(tuple(r) for r in one_shot.collect())
     got = served()
     assert got == want and got
 
-    assert compact_regression(spark, store, upto_batch_id=2) == 3
+    assert (
+        compact_partials(spark, REGRESSION_PARTIALS, store, upto_batch_id=2) == 3
+    )
     assert generation_ids(spark, store) == [-3]
     assert served() == want
 
@@ -1785,19 +1778,15 @@ def test_streaming_bitmap_exact_distinct_and_compact(spark, tmp_path):
     under overlapping batches (OR is idempotent — re-sending the same
     rows in a different batch cannot inflate the count), and compaction
     with the OR monoid preserves serving."""
-    from pdf_brain_spark.streaming.events import (
-        compact_bitmap,
-        make_bitmap_batch_fn,
-        read_bitmap_distinct,
-    )
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.events import BITMAP_PARTIALS, read_bitmap_distinct
+    from pdf_brain_spark.streaming.generations import compact_partials, generation_ids
     from pdf_brain_spark.sources.loaders import load_table
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "user_id"
     )
     store = str(tmp_path / "bm")
-    fn = make_bitmap_batch_fn(store)
+    fn = BITMAP_PARTIALS.writer(store)
     fn(ev.filter(F.col("event_id") % 2 == 0), 0)
     # OVERLAPPING batch: odd rows plus a resend of every 4th even row
     fn(ev.filter((F.col("event_id") % 2 == 1) | (F.col("event_id") % 4 == 0)), 1)
@@ -1820,7 +1809,7 @@ def test_streaming_bitmap_exact_distinct_and_compact(spark, tmp_path):
     fn(ev.filter((F.col("event_id") % 2 == 1) | (F.col("event_id") % 4 == 0)), 1)
     assert served() == want  # crash replay
 
-    assert compact_bitmap(spark, store, upto_batch_id=1) == 2
+    assert compact_partials(spark, BITMAP_PARTIALS, store, upto_batch_id=1) == 2
     assert generation_ids(spark, store) == [-2]
     assert served() == want
 
@@ -1831,19 +1820,15 @@ def test_streaming_cms_replay_merge_compact(spark, tmp_path):
     estimate upper-bounds the true count for EVERY term, and compaction
     with the additive monoid preserves serving."""
     from pdf_brain_spark.functions.text import tokenize
-    from pdf_brain_spark.streaming.events import (
-        compact_cms,
-        make_cms_batch_fn,
-        read_cms_estimates,
-    )
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.events import CMS_PARTIALS, read_cms_estimates
+    from pdf_brain_spark.streaming.generations import compact_partials, generation_ids
     from pdf_brain_spark.sources.loaders import load_table
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
         "doc_id", "text"
     )
     store = str(tmp_path / "cms")
-    fn = make_cms_batch_fn(store)
+    fn = CMS_PARTIALS.writer(store)
     fn(docs.filter(F.col("doc_id") % 3 == 0), 0)
     fn(docs.filter(F.col("doc_id") % 3 == 1), 1)
     fn(docs.filter(F.col("doc_id") % 3 == 2), 2)
@@ -1878,14 +1863,14 @@ def test_streaming_cms_replay_merge_compact(spark, tmp_path):
 
     # one-shot sketch over ALL docs must equal the streamed-and-merged one
     one_shot_store = str(tmp_path / "cms_one")
-    make_cms_batch_fn(one_shot_store)(docs, 0)
+    CMS_PARTIALS.writer(one_shot_store)(docs, 0)
     want = sorted(
         (r["term"], r["cms_estimate"])
         for r in read_cms_estimates(spark, one_shot_store, exact.select("term")).collect()
     )
     assert served() == want
 
-    assert compact_cms(spark, store, upto_batch_id=2) == 3
+    assert compact_partials(spark, CMS_PARTIALS, store, upto_batch_id=2) == 3
     assert generation_ids(spark, store) == [-3]
     assert served() == want
 
@@ -1898,11 +1883,8 @@ def test_streaming_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     over all data (monoid invariance through a real restart)."""
     import os
 
-    from pdf_brain_spark.streaming.events import (
-        read_kmv,
-        streaming_incremental_kmv as drive_kmv,
-    )
-    from pdf_brain_spark.streaming.generations import write_seqs
+    from pdf_brain_spark.streaming.events import KMV_PARTIALS, read_kmv
+    from pdf_brain_spark.streaming.generations import drive_available_now, write_seqs
     from pdf_brain_spark.sources.loaders import load_table
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
@@ -1920,7 +1902,7 @@ def test_streaming_checkpoint_resume_processes_only_new_files(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(stage)
         )
-        drive_kmv(spark, stream, store, ckpt).awaitTermination()
+        drive_available_now(stream, KMV_PARTIALS.writer(store), ckpt)
 
     run()
     seqs_before = write_seqs(spark, store)
@@ -1975,19 +1957,18 @@ def test_streaming_minhash_replay_merge_compact(spark, tmp_path):
     so even OVERLAPPING batches cannot skew it), and compaction with
     the MIN monoid preserves serving."""
     from pdf_brain_spark.streaming.events import (
+        MINHASH_PARTIALS,
         _minhash_partial,
-        compact_minhash,
-        make_minhash_batch_fn,
         read_minhash_similarity,
     )
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.generations import compact_partials, generation_ids
     from pdf_brain_spark.sources.loaders import load_table
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
         "doc_id", "source", "text"
     )
     store = str(tmp_path / "mh")
-    fn = make_minhash_batch_fn(store)
+    fn = MINHASH_PARTIALS.writer(store)
     fn(docs.filter(F.col("doc_id") % 3 == 0), 0)
     # overlapping batch: thirds 1 and 2 plus a resend of every 6th doc
     fn(docs.filter((F.col("doc_id") % 3 != 0) | (F.col("doc_id") % 6 == 0)), 1)
@@ -2007,7 +1988,7 @@ def test_streaming_minhash_replay_merge_compact(spark, tmp_path):
             tuple(r) for r in read_minhash_similarity(spark, store).collect()
         )
 
-    one_shot_sig = _minhash_partial(docs, "source", "text")
+    one_shot_sig = _minhash_partial(docs, 0)
     a = one_shot_sig.selectExpr("grp as src_a", "k", "sig as sig_a")
     b = one_shot_sig.selectExpr("grp as src_b", "k as kb", "sig as sig_b")
     want = sorted(
@@ -2027,7 +2008,7 @@ def test_streaming_minhash_replay_merge_compact(spark, tmp_path):
     got = served()
     assert got == want and got
 
-    assert compact_minhash(spark, store, upto_batch_id=1) == 2
+    assert compact_partials(spark, MINHASH_PARTIALS, store, upto_batch_id=1) == 2
     assert generation_ids(spark, store) == [-2]
     assert served() == want
 
@@ -2280,11 +2261,8 @@ def test_novelty_store_monoid_replay_and_compaction(spark, tmp_path):
     compaction serve-identical to the uncompacted store, and (3) the
     served first-seen table equal a python incremental seen-set walk
     over the same batches."""
-    from pdf_brain_spark.streaming.events import (
-        compact_novelty,
-        make_novelty_batch_fn,
-        read_novelty,
-    )
+    from pdf_brain_spark.streaming.events import NOVELTY_PARTIALS, read_novelty
+    from pdf_brain_spark.streaming.generations import compact_partials
 
     b0 = spark.createDataFrame(
         [(0, "alpha beta gamma delta epsilon"), (1, "beta gamma delta epsilon zeta")],
@@ -2295,7 +2273,7 @@ def test_novelty_store_monoid_replay_and_compaction(spark, tmp_path):
         "doc_id long, text string",
     )
     store = str(tmp_path / "novelty")
-    fn = make_novelty_batch_fn(store)
+    fn = NOVELTY_PARTIALS.writer(store)
     fn(b0, 0)
     fn(b1, 1)
     served = {
@@ -2326,7 +2304,7 @@ def test_novelty_store_monoid_replay_and_compaction(spark, tmp_path):
     } == {tuple(sorted(want)[0]), tuple(sorted(want)[1])}
 
     # compaction is serve-identical
-    assert compact_novelty(spark, store, upto_batch_id=1) == 2
+    assert compact_partials(spark, NOVELTY_PARTIALS, store, upto_batch_id=1) == 2
     assert {tuple(r) for r in read_novelty(spark, store).collect()} == want
 
 
@@ -2339,10 +2317,7 @@ def test_novelty_store_random_batch_split_invariance(spark, tmp_path):
     stream carved."""
     import random
 
-    from pdf_brain_spark.streaming.events import (
-        make_novelty_batch_fn,
-        read_novelty,
-    )
+    from pdf_brain_spark.streaming.events import NOVELTY_PARTIALS, read_novelty
 
     vocab = [f"w{i}" for i in range(12)]
     for seed in (9, 51):
@@ -2358,7 +2333,7 @@ def test_novelty_store_random_batch_split_invariance(spark, tmp_path):
             batches.append(docs[prev:c])
             prev = c
         store = str(tmp_path / f"nov_{seed}")
-        fn = make_novelty_batch_fn(store)
+        fn = NOVELTY_PARTIALS.writer(store)
         for bid, rows in enumerate(batches):
             fn(
                 spark.createDataFrame(rows, "doc_id long, text string"),
@@ -2385,3 +2360,76 @@ def test_novelty_store_random_batch_split_invariance(spark, tmp_path):
             seen |= fresh
         want = {(b, n) for b, n in counts.items()}
         assert served == want, (seed, served, want)
+
+
+def test_partials_writer_skips_empty_batch_for_every_spec(spark, tmp_path):
+    """An empty micro-batch (an AvailableNow run with nothing new, or a
+    slice that filtered to nothing) must leave no trace in any partials
+    store: no batch_id=N dir, no write-sequence marker, and no protocol
+    stamp — a stamp alone would make a never-written store look
+    initialised."""
+    import os
+
+    from pdf_brain_spark.streaming import events
+    from pdf_brain_spark.streaming.generations import PartialsSpec, write_seqs
+
+    specs = {
+        name: spec
+        for name, spec in vars(events).items()
+        if isinstance(spec, PartialsSpec)
+    }
+    assert len(specs) == 10
+    empty = spark.createDataFrame(
+        [],
+        "doc_id long, source string, text string, event_id long, "
+        "event_type string, user_id long, ts timestamp, value double",
+    )
+    for name, spec in specs.items():
+        store = str(tmp_path / name)
+        spec.writer(store)(empty, 3)
+        assert not os.path.exists(store), name
+        assert write_seqs(spark, store) == {}, name
+
+
+def test_staged_stream_pins_batch_order_on_shared_mtime(spark, tmp_path, monkeypatch):
+    """staged_stream makes slice i batch i even when every staged file
+    carries the SAME modification time, the case where the file source's
+    own ordering is a tie broken arbitrarily. The parquet writer is
+    patched so that each staging write leaves all staged files at one
+    shared millisecond."""
+    import os
+    import time
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from pdf_brain_spark.gates.core import staged_stream
+
+    shared_ns = time.time_ns() // 1_000_000 * 1_000_000
+    write_parquet = DataFrameWriter.parquet
+
+    def parquet_one_mtime(self, path, *args, **kwargs):
+        write_parquet(self, path, *args, **kwargs)
+        for name in os.listdir(path):
+            if name.endswith(".parquet"):
+                os.utime(os.path.join(path, name), ns=(shared_ns, shared_ns))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_one_mtime)
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(12)], "doc_id long, text string"
+    )
+    slices = [docs.filter(F.col("doc_id") % 3 == r) for r in (2, 0, 1)]
+    seen = {}
+
+    def writer(store_dir):
+        def each_batch(batch_df, batch_id):
+            seen[batch_id] = sorted(r["doc_id"] for r in batch_df.collect())
+
+        return each_batch
+
+    out = staged_stream(spark, slices, writer, lambda d: spark.range(1))
+    assert out.count() == 1
+    assert seen == {
+        0: [2, 5, 8, 11],
+        1: [0, 3, 6, 9],
+        2: [1, 4, 7, 10],
+    }
